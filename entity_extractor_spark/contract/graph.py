@@ -42,7 +42,7 @@ def graph_components_star(spark, sf_dir):
     2014) over a sparse part<->supplier bipartite graph, against a DuckDB
     recursive-CTE transitive-closure oracle. algorithm='star' forces the
     distributed O(log n)-round path (the KG driver queries already gate the
-    union-find and hash-min paths via their own closure oracles).
+    union-find path via their own closure oracles).
     Reference semantics: global-node cluster identity,
     artifact_ingestor_service.py:1108-1145."""
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 997 == 1)

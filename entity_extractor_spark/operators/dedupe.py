@@ -357,8 +357,8 @@ def ngram_jaccard_pairs(
 
 def dedup_canonical(pairs: DataFrame, ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Collapse near-dup PAIRS into canonical clusters: connected components
-    over the pair graph (graph.py adaptive CC — union-find / hash-min /
-    large-small-star by size), keeper = numeric-min doc of each component,
+    over the pair graph (graph.py adaptive CC — union-find / large-small-star
+    by size), keeper = numeric-min doc of each component,
     singletons keep themselves. Output (doc_id, keeper, is_dup).
 
     This is the step that turns any pair generator (LSH, SimHash radius,

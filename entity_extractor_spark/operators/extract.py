@@ -145,23 +145,6 @@ def dedupe_chemicals(parsed: DataFrame) -> DataFrame:
     )
 
 
-def parse_headers(spans: DataFrame) -> DataFrame:
-    """One material header per doc (first matching span by offset).
-    Compatibility wrapper over parse_spans -> resolve_headers; callers that
-    also need chemicals should parse once with parse_spans and derive both
-    (plans/pipeline.py does)."""
-    return resolve_headers(parse_spans(spans))
-
-
-def parse_chemicals(spans: DataFrame, headers: DataFrame) -> DataFrame:
-    """Chemical observation lines, deduped last-wins per (doc, name) with
-    first-occurrence ordering (A5), restricted to docs that have a header.
-    Compatibility wrapper over parse_spans -> dedupe_chemicals."""
-    return dedupe_chemicals(parse_spans(spans)).join(
-        headers.select("doc_id"), "doc_id", "left_semi"
-    )
-
-
 def winner_docs(headers: DataFrame, chem_counts: DataFrame, existing_material_keys: DataFrame | None = None) -> DataFrame:
     """Validation + J7 first-document-wins.
 

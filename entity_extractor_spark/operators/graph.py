@@ -1,18 +1,13 @@
 """Connected components over an edge DataFrame — the canonicalization
 primitive (stage s5). GraphFrames-style iterative DataFrame joins, no RDDs.
 
-Three physical strategies behind one signature:
+Two physical strategies behind one signature:
   * driver union-find — exact, one collect, for vocabulary graphs under
     SMALL_GRAPH_EDGES (the common case: the DISTINCT name<->CAS graph is
     orders of magnitude smaller than the observation table);
-  * hash-min label propagation — each vertex takes the min label among
-    itself and its neighbors per round; O(graph diameter) rounds. The KG
-    equivalence graphs here are bipartite name<->CAS stars (diameter <= ~4
-    after unions), so 2-4 rounds close them;
   * alternating large-star/small-star (Kiveris et al., "Connected
     Components in MapReduce and Beyond", 2014) — O(log^2 n) rounds
-    regardless of diameter, for adversarially deep graphs (long chains)
-    where hash-min's O(d) rounds would dominate.
+    regardless of diameter, for graphs too large to collect.
 
 Scale notes (10^12-doc corpus, hub chemicals => skewed degree):
   * the min() aggregations are algebraic => map-side partial aggregation
@@ -31,11 +26,6 @@ from pyspark.sql import functions as F
 
 SMALL_GRAPH_EDGES = 2_000_000
 
-# hash-min pays O(diameter) rounds; star pays ~2 jobs per round but closes
-# any graph in O(log) rounds. Auto mode switches to star when hash-min has
-# not converged after this many rounds (deep-chain escape hatch).
-HASHMIN_MAX_ROUNDS_BEFORE_STAR = 8
-
 
 def _clean_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Canonical (src, dst) projection with nulls dropped — the shared
@@ -52,6 +42,20 @@ def _symmetrized(e: DataFrame) -> DataFrame:
     ).distinct()
 
 
+def _fingerprint(df: DataFrame, *cols: str) -> tuple[int, int]:
+    """(count, xxhash64-sum) of the rows' `cols` — the fixpoint check of
+    every iterative operator here: two scalars per round instead of a
+    subtract join. The decimal(38,0) accumulator sums 64-bit hashes over
+    any realistic row count without ANSI long overflow."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")), F.lit(0)
+        ).alias("h"),
+    ).collect()[0]
+    return int(row["n"]), int(row["h"])
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -63,16 +67,17 @@ def connected_components(
     the min vertex id (lexicographic) in the vertex's component.
 
     algorithm:
-      'auto'    — union-find when the distinct graph fits on the driver;
-                  otherwise hash-min, escalating to large/small-star if
-                  hash-min has not converged after
-                  HASHMIN_MAX_ROUNDS_BEFORE_STAR rounds (deep graph).
-      'hashmin' — force the distributed hash-min loop.
-      'star'    — force the distributed large-star/small-star loop.
+      'auto' — union-find when the distinct graph fits on the driver,
+               otherwise large/small-star.
+      'star' — force the distributed large-star/small-star loop.
     """
+    if algorithm not in ("auto", "star"):
+        raise ValueError(
+            f"connected_components: algorithm must be 'auto' or 'star', got {algorithm!r}"
+        )
     und = _symmetrized(_clean_edges(edges, src, dst))
 
-    # Materialize the distinct vocabulary graph once (all paths reuse it),
+    # Materialize the distinct vocabulary graph once (both paths reuse it),
     # then size-probe with a limit+count — the probe moves NO rows to the
     # driver, so a graph that overflows the union-find cutoff costs two
     # cheap jobs instead of a multi-hundred-MB discarded collect. Only
@@ -80,15 +85,9 @@ def connected_components(
     und = und.localCheckpoint(eager=True)
     spark = edges.sparkSession
 
-    if algorithm == "star":
-        return _star_labels(spark, und, max_iter)
-    if algorithm == "hashmin":
-        return _hashmin_labels(und, max_iter, escalate=False)
-    if (
-        und.limit(SMALL_GRAPH_EDGES + 1).count() <= SMALL_GRAPH_EDGES
-    ):
+    if algorithm == "auto" and und.limit(SMALL_GRAPH_EDGES + 1).count() <= SMALL_GRAPH_EDGES:
         return _union_find_labels(spark, und)
-    return _hashmin_labels(und, max_iter, escalate=True)
+    return _star_labels(spark, und, max_iter)
 
 
 def _union_find_labels(spark: SparkSession, und: DataFrame) -> DataFrame:
@@ -119,41 +118,6 @@ def _union_find_labels(spark: SparkSession, und: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, "vertex string, component string")
 
 
-def _hashmin_labels(und: DataFrame, max_iter: int, escalate: bool) -> DataFrame:
-    labels = (
-        und.select(F.col("src").alias("vertex"))
-        .distinct()
-        .withColumn("component", F.col("vertex"))
-        .localCheckpoint(eager=True)
-    )
-
-    rounds = max_iter if not escalate else min(max_iter, HASHMIN_MAX_ROUNDS_BEFORE_STAR)
-    for _ in range(rounds):
-        # neighbor labels: for edge (u,v) send label(v) to u. The vertex's
-        # own old label rides along (old = component on the labels side,
-        # null on the msgs side) so convergence is checked with a cheap
-        # filter over the checkpointed result instead of an extra join+job.
-        msgs = und.join(
-            labels.withColumnRenamed("vertex", "dst"), "dst"
-        ).select(F.col("src").alias("vertex"), "component", F.lit(None).cast("string").alias("old"))
-        new_labels = (
-            msgs.union(labels.select("vertex", "component", F.col("component").alias("old")))
-            .groupBy("vertex")
-            .agg(F.min("component").alias("component"), F.max("old").alias("old"))
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.where(F.col("component") != F.col("old")).limit(1).count()
-        labels = new_labels.select("vertex", "component")
-        if changed == 0:
-            return labels
-    if escalate:
-        # Diameter exceeds the round budget (e.g. a long reference-chain
-        # graph): restart with the O(log)-round star algorithm rather than
-        # paying one shuffle round per remaining diameter unit.
-        return _star_labels(und.sparkSession, und, max_iter)
-    return labels
-
-
 def _star_labels(spark: SparkSession, und: DataFrame, max_iter: int) -> DataFrame:
     """Alternating large-star/small-star (Kiveris et al. 2014, §3).
 
@@ -175,18 +139,7 @@ def _star_labels(spark: SparkSession, und: DataFrame, max_iter: int) -> DataFram
     # re-derive them forever
     edges2 = und.where(F.col("src") != F.col("dst")).localCheckpoint(eager=True)
 
-    def fingerprint(df: DataFrame) -> tuple[int, int]:
-        # decimal(38,0) accumulator: 64-bit hash values summed over any
-        # realistic edge count without ANSI long overflow
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    fp = fingerprint(edges2)
+    fp = _fingerprint(edges2, "src", "dst")
     for _ in range(max_iter):
         # ---- large-star ----
         bidir = edges2.union(
@@ -216,7 +169,7 @@ def _star_labels(spark: SparkSession, und: DataFrame, max_iter: int) -> DataFram
             .distinct()
             .localCheckpoint(eager=True)
         )
-        new_fp = fingerprint(edges2)
+        new_fp = _fingerprint(edges2, "src", "dst")
         if new_fp == fp:
             break
         fp = new_fp
@@ -772,8 +725,8 @@ def transitive_closure(
     recursive CTE, the oracle's formulation) costs 40. Each round is ONE
     self-equi-join on the hop vertex plus ONE algebraic min-groupBy (map-
     side partial absorbs fan-in hubs); per-round localCheckpoint keeps
-    lineage O(1); convergence is a (count, xxhash64-sum) fingerprint like
-    _star_labels — metadata only, no subtract join. Deterministic: min
+    lineage O(1); convergence is the shared (count, xxhash64-sum) _fingerprint
+    — metadata only, no subtract join. Deterministic: min
     over a fixed set, no tie to break. Cycles are safe (min dist to self
     via the cycle is finite and stabilizes) but the intended input is the
     DAG shape of hierarchies; output rows are (src, dst, dist >= 1).
@@ -789,18 +742,8 @@ def transitive_closure(
         .localCheckpoint(eager=True)
     )
 
-    def fingerprint(df: DataFrame) -> tuple[int, int]:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("src", "dst", "dist").cast("decimal(38,0)")),
-                F.lit(0),
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
     reach = e
-    fp = fingerprint(reach)
+    fp = _fingerprint(reach, "src", "dst", "dist")
     for _ in range(max_rounds):
         hops = (
             reach.alias("a")
@@ -824,7 +767,7 @@ def transitive_closure(
             .agg(F.min("dist").alias("dist"))
             .localCheckpoint(eager=True)
         )
-        nfp = fingerprint(reach)
+        nfp = _fingerprint(reach, "src", "dst", "dist")
         if nfp == fp:
             break
         fp = nfp
@@ -1045,17 +988,7 @@ def weighted_sssp(
         .localCheckpoint(eager=True)
     )
 
-    def fingerprint(df: DataFrame) -> tuple[int, int]:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("vertex", "dist").cast("decimal(38,0)")),
-                F.lit(0),
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    fp = fingerprint(dist)
+    fp = _fingerprint(dist, "vertex", "dist")
     for _ in range(max_rounds):
         relaxed = (
             dist.join(e, dist["vertex"] == e["src"])
@@ -1067,7 +1000,7 @@ def weighted_sssp(
             .agg(F.min("dist").alias("dist"))
             .localCheckpoint(eager=True)
         )
-        nfp = fingerprint(dist)
+        nfp = _fingerprint(dist, "vertex", "dist")
         if nfp == fp:
             break
         fp = nfp
@@ -1531,15 +1464,6 @@ def strongly_connected(
         .localCheckpoint(eager=True)
     )
 
-    def fingerprint(df: DataFrame, *cols: str) -> tuple[int, int]:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64(*cols).cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
     assigned = None
     e = e_all
     verts = (
@@ -1555,7 +1479,7 @@ def strongly_connected(
         color = verts.select("v", F.col("v").alias("color")).localCheckpoint(
             eager=True
         )
-        fp = fingerprint(color, "v", "color")
+        fp = _fingerprint(color, "v", "color")
         for _i in range(max_inner):
             pushed = (
                 e.join(color, e["src"] == color["v"])
@@ -1567,7 +1491,7 @@ def strongly_connected(
                 .agg(F.min("color").alias("color"))
                 .localCheckpoint(eager=True)
             )
-            nfp = fingerprint(color, "v", "color")
+            nfp = _fingerprint(color, "v", "color")
             if nfp == fp:
                 break
             fp = nfp
@@ -1590,7 +1514,7 @@ def strongly_connected(
             .select("v", "color")
             .localCheckpoint(eager=True)
         )
-        fp = fingerprint(conf, "v", "color")
+        fp = _fingerprint(conf, "v", "color")
         for _i in range(max_inner):
             back = (
                 ce.join(conf, ce["dst"] == conf["v"])
@@ -1599,7 +1523,7 @@ def strongly_connected(
             conf = (
                 conf.union(back).distinct().localCheckpoint(eager=True)
             )
-            nfp = fingerprint(conf, "v", "color")
+            nfp = _fingerprint(conf, "v", "color")
             if nfp == fp:
                 break
             fp = nfp

@@ -21,16 +21,17 @@ transition lattice and unconditionally overwrites cas_number
      operators/disambiguate.py (north-star s4b; exercised by the
      link_cosine_disambiguation contract query — the constrained corpus
      never produces key misses, so it is not wired into the e2e path);
-  4. per-component ordered lattice fold (applyInPandas) reproduces the
-     sequential status/source merge; canonical name = first observation's
-     name (node-creation semantics), final cas = last observation's cas
+  4. per-component ordered lattice fold (a JVM-side aggregate() over the
+     cluster's sorted observations) reproduces the sequential
+     status/source merge; canonical name = first observation's name
+     (node-creation semantics), final cas = last observation's cas
      (unconditional overwrite, :1083).
 
-Scale: the fold state domain is 3 statuses x 5 sources = 15 states, so a
-hub component's fold is parallelizable by composing per-chunk state
-transition tables associatively (tree reduction); the grouped fold below is
-the simple form — swap point documented for when single components exceed
-one task's memory.
+Scale: the fold holds one cluster's observations in one task
+(collect_list). On a hub corpus (one cluster holding ~35% of
+observations, perfbench resume_hub, 4 cores) it commits `chem_nodes` in
+0.48-0.52 s against 1.31-1.83 s for an associative per-doc
+transition-table composition, so it is the only fold implementation.
 """
 
 from __future__ import annotations
@@ -142,13 +143,6 @@ def assign_clusters(obs: DataFrame, existing_nodes: DataFrame | None = None) -> 
 # whole-stage codegen, zero Python in the hot path. Semantics are pinned
 # byte-for-byte against functions.lattice.fold_observation by
 # tests/test_lattice.py::test_spark_fold_matches_python.
-#
-# Scale note: collect_list holds one cluster's observations in one task.
-# Hub clusters at extreme scale would instead use the associative form —
-# function composition over the 16-state domain is associative, so each
-# partition can pre-compose its observations into a 16-entry transition
-# table and tables merge pairwise (map-side combine). Swap point documented;
-# not needed at benchable scales.
 _TRANS_SQL = "map(" + ", ".join(
     f"'{k}', '{v if v is not None else ''}'" for k, v in TRANSITION_MAP.items()
 ) + ")"
@@ -239,184 +233,4 @@ def chemical_edges(clustered: DataFrame) -> DataFrame:
         F.max_by(
             "weight_percent", F.struct(F.col("doc_id"), F.col("seq"))
         ).alias("chemical_weight_percent")
-    )
-
-
-# --- associative (salted) fold: the hub-cluster scale path ------------------
-#
-# fold_chemical_nodes holds one cluster's observations in one task
-# (collect_list). A hub chemical at 10^12-doc scale could put billions of
-# observations in one cluster — the associative form below bounds per-task
-# payloads instead:
-#
-#   * the fold is a DFA over 16 states: index 0 = pre-creation, else
-#     1 + status*5 + source_class with status in {YES(0),NO(1),PENDING(2)}
-#     and source_class in {MANUAL, OECD, NONE, OPENAI, OTHER}. Every source
-#     string outside the first four behaves identically (TRANSITION_MAP has
-#     no keys for it, so every transition from it drops) => one OTHER
-#     class; the concrete string is recovered at finalization (the only
-#     transition INTO OTHER stores 'VAI'; a creation into OTHER stores the
-#     first observation's raw source, which is tracked separately).
-#   * each observation is a function state -> state; each DOCUMENT's
-#     observations pre-compose into a 16-entry transition table
-#     (fs, dropped, cas_set, cas_val per start state);
-#   * tables compose associatively in doc order, so the per-cluster merge
-#     moves O(#docs * 16 ints) instead of O(#observations * full strings)
-#     (~10-50x smaller; the next rung is a log-round pairwise tree reduce
-#     of the same tables — plug-compatible because composition is
-#     associative).
-#
-# Equivalence with the sequential fold (and therefore with the reference
-# control flow) is asserted by tests/test_lattice.py::test_salted_fold_*.
-
-_CLASSES = ["MANUAL", "OECD", "NONE", "OPENAI"]  # class 4 = OTHER
-
-
-def _cls(src: str) -> str:
-    return (
-        f"(CASE coalesce({src}, 'NONE') "
-        + " ".join(f"WHEN '{c}' THEN {i}" for i, c in enumerate(_CLASSES))
-        + " ELSE 4 END)"
-    )
-
-
-def _tag_st(o: str) -> str:
-    return f"(CASE WHEN {o}.tag = 'PFAS' THEN 0 WHEN {o}.tag = 'NO_PFAS' THEN 1 ELSE 2 END)"
-
-
-def _existing_str(fs: str) -> str:
-    return (
-        f"(CASE (({fs} - 1) % 5) "
-        + " ".join(f"WHEN {i} THEN '{c}'" for i, c in enumerate(_CLASSES))
-        + " ELSE NULL END)"
-    )
-
-
-def _step_expr(a: str, o: str) -> str:
-    """One observation applied to one start-state slot `a` (fields fs, dr,
-    cset, cval)."""
-    key = f"concat({_existing_str(f'{a}.fs')}, '_', coalesce({o}.source, 'NONE'))"
-    mapped = f"coalesce(element_at({_TRANS_SQL}, {key}), '')"
-    new_status = (
-        f"(CASE WHEN {key} IN ({_PAIRS_SQL}) THEN {_tag_st(o)} "
-        f"ELSE (({a}.fs - 1) DIV 5) END)"
-    )
-    return f"""
-    CASE
-      WHEN {a}.fs = 0 THEN named_struct(
-        'fs', 1 + {_tag_st(o)} * 5 + {_cls(f'{o}.source')},
-        'dr', {a}.dr, 'cset', true, 'cval', {o}.cas_number)
-      WHEN {_existing_str(f'{a}.fs')} IS NULL OR {mapped} = ''
-        THEN named_struct('fs', {a}.fs, 'dr', {a}.dr + 1,
-                          'cset', {a}.cset, 'cval', {a}.cval)
-      ELSE named_struct(
-        'fs', CAST(1 + {new_status} * 5 + {_cls(mapped)} AS INT),
-        'dr', {a}.dr, 'cset', true, 'cval', {o}.cas_number)
-    END"""
-
-
-_IDENTITY_TAB = (
-    "transform(sequence(0, 15), i -> named_struct("
-    "'fs', i, 'dr', 0, 'cset', false, 'cval', cast(null as string)))"
-)
-
-# per-doc chunk summary: fold the doc's (seq-sorted) obs over all 16 starts
-_TAB_TYPE = "ARRAY<STRUCT<fs:INT, dr:INT, cset:BOOLEAN, cval:STRING>>"
-
-_CHUNK_EXPR = f"""
-aggregate(obs, CAST({_IDENTITY_TAB} AS {_TAB_TYPE}),
-          (acc, o) -> transform(acc, a -> {_step_expr('a', 'o')}))
-"""
-
-# ordered composition of chunk tables: entry i of the result follows chunk
-# c from wherever the accumulated table sends state i
-_COMPOSE_EXPR = """
-aggregate(
-  chunks,
-  named_struct('tab', CAST(IDENTITY AS ARRAY<STRUCT<fs:INT, dr:INT, cset:BOOLEAN, cval:STRING>>)),
-  (acc, c) -> named_struct('tab', transform(acc.tab, a -> named_struct(
-      'fs',   element_at(c.tab, a.fs + 1).fs,
-      'dr',   a.dr + element_at(c.tab, a.fs + 1).dr,
-      'cset', a.cset OR element_at(c.tab, a.fs + 1).cset,
-      'cval', CASE WHEN element_at(c.tab, a.fs + 1).cset
-                   THEN element_at(c.tab, a.fs + 1).cval ELSE a.cval END)))
-).tab
-""".replace("IDENTITY", _IDENTITY_TAB)
-
-_ST_NAMES = ["YES", "NO", "PENDING"]
-_START_IDX = (
-    "(CASE WHEN init_status IS NULL THEN 0 ELSE 1 + "
-    "(CASE init_status WHEN 'YES' THEN 0 WHEN 'NO' THEN 1 ELSE 2 END) * 5 + "
-    + _cls("init_source")
-    + " END)"
-)
-
-
-def fold_chemical_nodes_scalable(clustered: DataFrame) -> DataFrame:
-    """Associative variant of fold_chemical_nodes — identical output, hub-
-    skew-safe dataflow: per-(cluster, doc) transition tables composed in
-    doc order. Same schema as fold_chemical_nodes."""
-    init_cols = [c for c in _INIT_COLS if c in clustered.columns]
-    per_doc = (
-        clustered.select(
-            "cluster", "doc_id", "manufacturer_id", *init_cols,
-            F.struct("seq", "chemical_name", "cas_number", "tag", "source").alias("o"),
-        )
-        .groupBy("cluster", "doc_id")
-        .agg(
-            F.min("manufacturer_id").alias("manufacturer_id"),
-            *[F.min(c).alias(c) for c in init_cols],
-            F.array_sort(F.collect_list("o")).alias("obs"),
-        )
-        .select(
-            "cluster", "doc_id", "manufacturer_id", *init_cols,
-            F.expr(_CHUNK_EXPR).alias("tab"),
-            # creation metadata: the doc's first observation (only the
-            # FIRST doc's values are used, via min over (doc_id, ...))
-            F.expr("element_at(obs, 1).chemical_name").alias("name0"),
-            F.expr("coalesce(element_at(obs, 1).source, 'NONE')").alias("src0"),
-        )
-    )
-    g = per_doc.groupBy("cluster").agg(
-        F.min("manufacturer_id").alias("manufacturer_id"),
-        *[F.min(c).alias(c) for c in (init_cols or [])],
-        F.array_sort(F.collect_list(F.struct("doc_id", "tab"))).alias("chunks"),
-        F.min(F.struct("doc_id", "name0", "src0")).alias("_first"),
-    )
-    for c in _INIT_COLS:
-        if c not in init_cols:
-            g = g.withColumn(c, F.lit(None).cast("string"))
-    g = (
-        g.withColumn("tab", F.expr(_COMPOSE_EXPR))
-        .withColumn("start", F.expr(_START_IDX))
-        .withColumn("e", F.expr("element_at(tab, start + 1)"))
-    )
-    final_cls = "((e.fs - 1) % 5)"
-    status = (
-        "(CASE ((e.fs - 1) DIV 5) "
-        + " ".join(f"WHEN {i} THEN '{s}'" for i, s in enumerate(_ST_NAMES))
-        + " END)"
-    )
-    source = (
-        f"(CASE WHEN {final_cls} < 4 THEN "
-        f"(CASE {final_cls} "
-        + " ".join(f"WHEN {i} THEN '{c}'" for i, c in enumerate(_CLASSES))
-        + " END) "
-        f"WHEN start = 0 THEN (CASE WHEN {_cls('_first.src0')} = 4 THEN _first.src0 ELSE 'VAI' END) "
-        f"WHEN {_cls('init_source')} = 4 THEN init_source ELSE 'VAI' END)"
-    )
-    return g.select(
-        "cluster",
-        F.coalesce(
-            F.col("existing_id"),
-            entity_id(F.lit("chem"), F.col("cluster"), F.lit("")),
-        ).alias("chem_id"),
-        F.expr(
-            "CASE WHEN start = 0 THEN _first.name0 ELSE init_name END"
-        ).alias("name"),
-        F.expr("CASE WHEN e.cset THEN e.cval ELSE init_cas END").alias("cas_number"),
-        "manufacturer_id",
-        F.expr(status).alias("pfas_status"),
-        F.expr(source).alias("pfas_information_source"),
-        F.col("e.dr").cast("string").alias("n_dropped"),
     )

@@ -19,53 +19,179 @@ mention scan and the extract path; the three projections of `winners`) are
 submitted as CONCURRENT Spark jobs from a thread pool, so one stage's
 commit/barrier tail overlaps another stage's compute. On a large cluster
 this keeps executors busy across stage boundaries; the per-stage lineage
-contract is unchanged (each stage still commits atomically).
+contract is unchanged (each stage still commits atomically). The graph is
+declared once, in STAGES: each entry names its builder, data and
+scheduling dependencies, lineage counters and whether it reads the parsed
+stream.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from dataclasses import dataclass
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.core import entity_id
 from ..operators import extract as X
 from ..operators import link as L
 from ..operators import mentions as M
 from ..operators import propagate as P
 from .lineage import LineageLog, commit_stage, load_stage
 
-STAGE_ORDER = [
-    "mentions",
-    "winners",
-    "observations",
-    "materials",
-    "manufacturers",
-    "clustered",
-    "chem_nodes",
-    "edges",
-    "nodes",
-    "triples",
-]
 
-# stage -> direct dependencies (DAG edges); independent stages run as
-# concurrent Spark jobs.
-STAGE_DEPS: dict[str, list[str]] = {
-    "mentions": [],
-    "winners": [],
-    "observations": ["winners"],
-    "materials": ["winners"],
-    "manufacturers": ["winners"],
-    "clustered": ["observations"],
-    "chem_nodes": ["clustered"],
-    "edges": ["clustered"],
-    "nodes": ["materials", "chem_nodes", "edges"],
-    "triples": ["manufacturers", "materials", "chem_nodes", "edges"],
-}
+@dataclass(frozen=True)
+class Stage:
+    """One pipeline stage, declared once.
 
-# Scheduling-only extra edges (no data dependency): a leaf stage that would
-# compete with the gating extract chain yields to it instead. Two jobs that
-# each saturate the cluster finish at t_a+t_b whether run concurrently or
+    `build(run, **inputs)` receives the run's non-stage inputs (`_Run`) and
+    exactly the committed tables named in `deps`, as keyword arguments — a
+    builder cannot read a stage it does not declare. `after` adds
+    scheduling-only edges (nothing flows along them; resume and lineage
+    ignore them). `counters` maps named lineage counters to summed output
+    columns. `reads_parsed` marks the stages that traverse the persisted
+    parsed stream, which is materialized once before any of them runs."""
+
+    name: str
+    build: Callable[..., DataFrame]
+    deps: tuple[str, ...] = ()
+    after: tuple[str, ...] = ()
+    counters: dict[str, str] | None = None
+    reads_parsed: bool = False
+
+    @property
+    def sched_deps(self) -> tuple[str, ...]:
+        return self.deps + self.after
+
+
+@dataclass(frozen=True)
+class _Run:
+    """Per-run inputs of the stage builders: everything that is not a
+    committed stage table."""
+
+    documents: DataFrame
+    gazetteer: list[dict] | None
+    existing_nodes: DataFrame | None
+    headers: DataFrame
+    chems: DataFrame
+    existing_keys: DataFrame | None
+
+
+# Builders look their operators up on the module (X.*, L.*, M.*, P.*) at
+# call time, so anything that rebinds a module attribute (tracing shims,
+# test monkeypatches) takes effect; the declaration below holds only these
+# wrappers, never the operator functions themselves.
+def _mentions(run: _Run) -> DataFrame:
+    return M.detect_mentions(run.documents, run.gazetteer)
+
+
+def _winners(run: _Run) -> DataFrame:
+    return X.winner_docs(run.headers, run.chems.select("doc_id").distinct(), run.existing_keys)
+
+
+def _observations(run: _Run, winners: DataFrame) -> DataFrame:
+    return X.observations(winners, run.chems)
+
+
+def _materials(run: _Run, winners: DataFrame) -> DataFrame:
+    return X.materials_table(winners)
+
+
+def _manufacturers(run: _Run, winners: DataFrame) -> DataFrame:
+    return X.manufacturers_table(winners)
+
+
+def _clustered(run: _Run, observations: DataFrame) -> DataFrame:
+    return L.assign_clusters(observations, run.existing_nodes)
+
+
+def _chem_nodes(run: _Run, clustered: DataFrame) -> DataFrame:
+    return L.fold_chemical_nodes(clustered)
+
+
+def _edges(run: _Run, clustered: DataFrame) -> DataFrame:
+    return L.chemical_edges(clustered)
+
+
+# s6 — propagate + s7 — materialize node/triple tables
+def _nodes(run: _Run, materials: DataFrame, chem_nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    resolved = P.resolve_materials(edges, chem_nodes)
+    mats = (
+        materials
+        .drop("pfas_status", "pfas_information_source")
+        .join(resolved, materials["id"] == resolved["material_id"], "left")
+        .drop("material_id")
+        .fillna({"pfas_status": "PENDING", "pfas_information_source": "NONE"})
+        .select(
+            "id", "name", "node_type", "cas_number", "manufacturer_id",
+            "pfas_status", "pfas_information_source",
+        )
+    )
+    chem = chem_nodes.select(
+        F.col("chem_id").alias("id"),
+        "name",
+        F.lit("CHEMICAL").alias("node_type"),
+        "cas_number",
+        "manufacturer_id",
+        "pfas_status",
+        "pfas_information_source",
+    )
+    return mats.unionByName(chem)
+
+
+def _triples(
+    run: _Run,
+    manufacturers: DataFrame,
+    materials: DataFrame,
+    chem_nodes: DataFrame,
+    edges: DataFrame,
+) -> DataFrame:
+    has_chem = (
+        edges
+        .join(materials.select(F.col("id").alias("material_id"), F.col("name").alias("subj")), "material_id")
+        .join(chem_nodes.select("cluster", F.col("name").alias("obj"), "chem_id"), "cluster")
+        .select(
+            "subj",
+            F.lit("hasChemical").alias("pred"),
+            "obj",
+            F.col("material_id").alias("subj_id"),
+            F.col("chem_id").alias("obj_id"),
+            F.col("chemical_weight_percent").alias("weight_percent"),
+            F.lit(None).cast("string").alias("doc_id"),
+        )
+    )
+    made_by = materials.join(
+        F.broadcast(manufacturers.select(F.col("id").alias("mid"), F.col("name").alias("obj"))),
+        materials["manufacturer_id"] == F.col("mid"),
+    ).select(
+        F.col("name").alias("subj"),
+        F.lit("manufacturedBy").alias("pred"),
+        "obj",
+        F.col("id").alias("subj_id"),
+        F.col("mid").alias("obj_id"),
+        F.lit(None).cast("string").alias("weight_percent"),
+        F.lit(None).cast("string").alias("doc_id"),
+    )
+    evidenced = materials.select(
+        F.col("name").alias("subj"),
+        F.lit("evidencedBy").alias("pred"),
+        F.col("doc_id").alias("obj"),
+        F.col("id").alias("subj_id"),
+        F.col("doc_id").alias("obj_id"),
+        F.lit(None).cast("string").alias("weight_percent"),
+        "doc_id",
+    )
+    return has_chem.unionByName(made_by).unionByName(evidenced)
+
+
+# The stage graph, in topological order of its data edges (resume
+# invalidation walks this order). Independent stages run as concurrent
+# Spark jobs.
+#
+# `mentions` has one scheduling-only edge: a leaf stage that would compete
+# with the gating extract chain yields to it instead. Two jobs that each
+# saturate the cluster finish at t_a+t_b whether run concurrently or
 # back-to-back — but back-to-back, the critical path's stages commit without
 # queuing their tasks behind the unrelated mention scan. `mentions` has no
 # downstream consumer inside the DAG, so it yields until `clustered`
@@ -74,12 +200,24 @@ STAGE_DEPS: dict[str, list[str]] = {
 # short multi-job sequences especially hurt by FIFO queuing behind a
 # corpus-wide scan) runs uncontended, and the scan then overlaps the small
 # post-cluster tail (edges/chem_nodes/nodes/triples), which leaves most of
-# the cluster idle. Pure win on any cluster size; semantic STAGE_DEPS
-# (resume, lineage) are unchanged.
-SCHED_DEPS: dict[str, list[str]] = {
-    **STAGE_DEPS,
-    "mentions": ["clustered"],
-}
+# the cluster idle.
+#
+# Named counters: rows-per-stage is always recorded; `dropped` adds the sum
+# of lattice-fold drops.
+STAGES: tuple[Stage, ...] = (
+    Stage("mentions", _mentions, after=("clustered",)),
+    Stage("winners", _winners, reads_parsed=True),
+    Stage("observations", _observations, ("winners",), reads_parsed=True),
+    Stage("materials", _materials, ("winners",)),
+    Stage("manufacturers", _manufacturers, ("winners",)),
+    Stage("clustered", _clustered, ("observations",)),
+    Stage("chem_nodes", _chem_nodes, ("clustered",), counters={"dropped": "n_dropped"}),
+    Stage("edges", _edges, ("clustered",)),
+    Stage("nodes", _nodes, ("materials", "chem_nodes", "edges")),
+    Stage("triples", _triples, ("manufacturers", "materials", "chem_nodes", "edges")),
+)
+
+STAGE_ORDER = [s.name for s in STAGES]
 
 
 def run_pipeline(
@@ -90,11 +228,9 @@ def run_pipeline(
     existing_nodes: DataFrame | None = None,
     resume: bool = True,
     repartition: int | None = None,
-    scalable_fold: bool = False,
 ) -> dict[str, DataFrame]:
-    """scalable_fold=True swaps the per-cluster collect_list fold for the
-    associative per-doc transition-table fold (hub-cluster skew path,
-    operators/link.py) — identical output, bounded per-task payloads."""
+    """Run (or resume) the stage graph over `documents` into `out_dir` and
+    return every active stage's committed table by stage name."""
     log = LineageLog(out_dir)
     if not resume:
         log.invalidate_from(STAGE_ORDER[0], STAGE_ORDER)
@@ -151,103 +287,15 @@ def run_pipeline(
             ).alias("mat_key")
         )
 
-    # s6 — propagate + s7 — materialize node/triple tables
-    def build_nodes(out: dict[str, DataFrame]) -> DataFrame:
-        resolved = P.resolve_materials(out["edges"], out["chem_nodes"])
-        mats = (
-            out["materials"]
-            .drop("pfas_status", "pfas_information_source")
-            .join(resolved, out["materials"]["id"] == resolved["material_id"], "left")
-            .drop("material_id")
-            .fillna({"pfas_status": "PENDING", "pfas_information_source": "NONE"})
-            .select(
-                "id", "name", "node_type", "cas_number", "manufacturer_id",
-                "pfas_status", "pfas_information_source",
-            )
-        )
-        chem = out["chem_nodes"].select(
-            F.col("chem_id").alias("id"),
-            "name",
-            F.lit("CHEMICAL").alias("node_type"),
-            "cas_number",
-            "manufacturer_id",
-            "pfas_status",
-            "pfas_information_source",
-        )
-        return mats.unionByName(chem)
-
-    def build_triples(out: dict[str, DataFrame]) -> DataFrame:
-        manu = out["manufacturers"]
-        mats = out["materials"]
-        chem = out["chem_nodes"]
-        has_chem = (
-            out["edges"]
-            .join(mats.select(F.col("id").alias("material_id"), F.col("name").alias("subj")), "material_id")
-            .join(chem.select("cluster", F.col("name").alias("obj"), "chem_id"), "cluster")
-            .select(
-                "subj",
-                F.lit("hasChemical").alias("pred"),
-                "obj",
-                F.col("material_id").alias("subj_id"),
-                F.col("chem_id").alias("obj_id"),
-                F.col("chemical_weight_percent").alias("weight_percent"),
-                F.lit(None).cast("string").alias("doc_id"),
-            )
-        )
-        made_by = mats.join(
-            F.broadcast(manu.select(F.col("id").alias("mid"), F.col("name").alias("obj"))),
-            mats["manufacturer_id"] == F.col("mid"),
-        ).select(
-            F.col("name").alias("subj"),
-            F.lit("manufacturedBy").alias("pred"),
-            "obj",
-            F.col("id").alias("subj_id"),
-            F.col("mid").alias("obj_id"),
-            F.lit(None).cast("string").alias("weight_percent"),
-            F.lit(None).cast("string").alias("doc_id"),
-        )
-        evidenced = mats.select(
-            F.col("name").alias("subj"),
-            F.lit("evidencedBy").alias("pred"),
-            F.col("doc_id").alias("obj"),
-            F.col("id").alias("subj_id"),
-            F.col("doc_id").alias("obj_id"),
-            F.lit(None).cast("string").alias("weight_percent"),
-            "doc_id",
-        )
-        return has_chem.unionByName(made_by).unionByName(evidenced)
-
-    builders: dict[str, object] = {
-        "mentions": lambda out: M.detect_mentions(documents, gazetteer),
-        "winners": lambda out: X.winner_docs(
-            headers, chems.select("doc_id").distinct(), existing_keys
-        ),
-        "observations": lambda out: X.observations(out["winners"], chems),
-        "materials": lambda out: X.materials_table(out["winners"]),
-        "manufacturers": lambda out: X.manufacturers_table(out["winners"]),
-        "clustered": lambda out: L.assign_clusters(out["observations"], existing_nodes),
-        "chem_nodes": lambda out: (
-            L.fold_chemical_nodes_scalable if scalable_fold else L.fold_chemical_nodes
-        )(out["clustered"]),
-        "edges": lambda out: L.chemical_edges(out["clustered"]),
-        "nodes": build_nodes,
-        "triples": build_triples,
-    }
-    active = [s for s in STAGE_ORDER if s != "mentions" or gazetteer is not None]
+    run = _Run(documents, gazetteer, existing_nodes, headers, chems, existing_keys)
+    active = [s for s in STAGES if s.name != "mentions" or gazetteer is not None]
     out: dict[str, DataFrame] = {}
 
-    # north-rule counters: rows-per-stage is always recorded; these add the
-    # named semantic counters (mentions=stage rows of 'mentions',
-    # candidates=rows of 'observations', linked=rows of 'edges',
-    # dropped=sum of lattice-fold drops)
-    counter_cols = {"chem_nodes": {"dropped": "n_dropped"}}
-
-    def run_stage(name: str) -> DataFrame:
-        if resume and log.is_done(name):
-            return load_stage(log, spark, name)
-        return commit_stage(
-            log, spark, name, builders[name](out), counters_cols=counter_cols.get(name)
-        )
+    def run_stage(stage: Stage) -> DataFrame:
+        if resume and log.is_done(stage.name):
+            return load_stage(log, spark, stage.name)
+        df = stage.build(run, **{d: out[d] for d in stage.deps})
+        return commit_stage(log, spark, stage.name, df, counters_cols=stage.counters)
 
     # Event-driven DAG execution: a stage is submitted the moment its last
     # dependency commits (no wave barrier — a barrier would hold the
@@ -259,16 +307,16 @@ def run_pipeline(
     # fill whatever slots remain.
     depth: dict[str, int] = {}
 
-    def _depth(s: str) -> int:
-        if s not in depth:
-            below = [d for d, deps in SCHED_DEPS.items() if s in deps and d in active]
-            depth[s] = 1 + max((_depth(d) for d in below), default=0)
-        return depth[s]
+    def _depth(s: Stage) -> int:
+        if s.name not in depth:
+            below = [d for d in active if s.name in d.sched_deps]
+            depth[s.name] = 1 + max((_depth(d) for d in below), default=0)
+        return depth[s.name]
 
     # Materialize the parsed cache once, fully parallel, before any stage
     # runs: two concurrent first jobs would otherwise race to compute the
     # same cached partitions (block-lock waits + duplicated shuffle reads).
-    # Only the stages that traverse `parsed` gate this — winners and
+    # Only the stages declared `reads_parsed` gate this — winners and
     # observations (via the headers/chems chains); `mentions` scans the raw
     # corpus directly and shares no cache. A partial resume where only
     # post-extract stages remain (clustered/edges/nodes/triples read
@@ -281,11 +329,7 @@ def run_pipeline(
     # oracles replay the same comparison), which is the property the
     # contract needs; corpora that want numeric replay order for string
     # ids must zero-pad ('doc-%08d' — the corpus convention).
-    _parsed_consumers = ("winners", "observations")
-    if not (
-        resume
-        and all(log.is_done(s) for s in active if s in _parsed_consumers)
-    ):
+    if not (resume and all(log.is_done(s.name) for s in active if s.reads_parsed)):
         parsed.count()
 
     done: set[str] = set()
@@ -297,11 +341,11 @@ def run_pipeline(
             ready = [
                 s
                 for s in active
-                if s not in submitted and all(d in done for d in SCHED_DEPS[s])
+                if s.name not in submitted and all(d in done for d in s.sched_deps)
             ]
             for s in sorted(ready, key=_depth, reverse=True):
-                futures[ex.submit(run_stage, s)] = s
-                submitted.add(s)
+                futures[ex.submit(run_stage, s)] = s.name
+                submitted.add(s.name)
 
         submit_ready()
         while len(done) < len(active):

@@ -78,8 +78,9 @@ def test_parse_spans_adversarial_layouts_match_sequential_replay(spark):
         for d, sp in docs.items()
     ]
     df = spark.createDataFrame(rows)
-    headers = X.parse_headers(X.text_spans(df))
-    chems = X.parse_chemicals(X.text_spans(df), headers)
+    parsed = X.parse_spans(X.text_spans(df))
+    headers = X.resolve_headers(parsed)
+    chems = X.dedupe_chemicals(parsed).join(headers.select("doc_id"), "doc_id", "left_semi")
 
     # sequential replay with the same regexes (the reference control flow)
     want_headers, want_chems = {}, {}

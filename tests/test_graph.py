@@ -1,6 +1,6 @@
 """connected_components: driver union-find fast path vs distributed
-hash-min loop must agree exactly (the fast path is an adaptive physical
-strategy, not a semantic change)."""
+large/small-star loop must agree exactly (the fast path is an adaptive
+physical strategy, not a semantic change)."""
 
 from __future__ import annotations
 
@@ -62,7 +62,9 @@ def test_empty_edges(spark):
     assert G.connected_components(df).count() == 0
 
 
-@pytest.mark.parametrize("seed,nv,ne", [(11, 40, 60), (12, 150, 120), (13, 25, 160)])
+@pytest.mark.parametrize(
+    "seed,nv,ne", [(11, 40, 60), (12, 150, 120), (13, 25, 160), (21, 80, 70)]
+)
 def test_star_path_matches_bruteforce(spark, seed, nv, ne):
     edges = _random_edges(seed, nv, ne)
     df = spark.createDataFrame(edges, "src string, dst string")
@@ -95,10 +97,9 @@ def test_star_self_loops_and_singletons(spark):
     assert got == {"a": "a", "b": "b", "c": "b", "z": "z"}
 
 
-def test_auto_escalates_deep_chain_to_star(spark, monkeypatch):
-    # force the distributed path with a deep chain: hash-min's round budget
-    # (HASHMIN_MAX_ROUNDS_BEFORE_STAR) is exceeded and auto mode must hand
-    # off to star and still produce exact components.
+def test_auto_distributed_path_exact_on_deep_chain(spark, monkeypatch):
+    # force the distributed path of auto mode with a deep chain: it must
+    # close a 40-hop diameter and still produce exact components.
     monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
     edges = [(f"v{i:04d}", f"v{i + 1:04d}") for i in range(40)]
     df = spark.createDataFrame(edges, "src string, dst string")
@@ -106,18 +107,10 @@ def test_auto_escalates_deep_chain_to_star(spark, monkeypatch):
     assert got == {f"v{i:04d}": "v0000" for i in range(41)}
 
 
-def test_star_matches_hashmin_random(spark):
-    edges = _random_edges(21, 80, 70)
-    df = spark.createDataFrame(edges, "src string, dst string")
-    star = {
-        r["vertex"]: r["component"]
-        for r in G.connected_components(df, algorithm="star").collect()
-    }
-    hashmin = {
-        r["vertex"]: r["component"]
-        for r in G.connected_components(df, algorithm="hashmin").collect()
-    }
-    assert star == hashmin == _brute_components(edges)
+def test_unknown_algorithm_raises(spark):
+    df = spark.createDataFrame([("a", "b")], "src string, dst string")
+    with pytest.raises(ValueError, match="'auto' or 'star'"):
+        G.connected_components(df, algorithm="hashmin")
 
 
 def test_pagerank_matches_python_oracle(spark):

@@ -103,9 +103,13 @@ def test_resolve_material_source_preference_depends_on_status():
 
 # ---- Spark JVM fold (operators.link._FOLD_EXPR) vs the Python fold ----------
 
-def _python_fold(rows):
-    """Literal replay of the reference control flow over one cluster."""
+def _python_fold(rows, init=None):
+    """Literal replay of the reference control flow over one cluster.
+    `init` = (status, source, name, cas) of a matched existing node: the
+    fold starts from that node instead of creating one."""
     state, name, cas, dropped = None, None, None, 0
+    if init is not None:
+        state, name, cas = (init[0], init[1]), init[2], init[3]
     for (doc_id, seq, chem_name, cas_number, tag, source) in sorted(rows):
         try:
             new_state = fold_observation(state, tag, source)
@@ -167,39 +171,42 @@ def test_spark_fold_matches_python(spark):
         assert got[key] == _python_fold(obs), key
 
 
-def test_salted_fold_matches_sequential(spark):
-    """The associative per-doc-table fold must equal the sequential fold on
-    adversarial inputs (error cells, OTHER-class sources, creations into
-    OTHER, null CAS overwrites) — with and without init state."""
+def test_spark_fold_with_init_state_matches_python(spark):
+    """The fold's init-state path (re-ingest MERGE into an existing node):
+    adversarial rows — error cells, OTHER-class stored and new sources
+    (VAI/ECHA/WEIRD/ODD), null sources and null CAS overwrites — with and
+    without a matched existing node must replay the Python fold exactly,
+    and a matched node keeps its id."""
     import random
 
-    from entity_extractor_spark.operators.link import (
-        fold_chemical_nodes,
-        fold_chemical_nodes_scalable,
-    )
+    from entity_extractor_spark.operators.link import fold_chemical_nodes
 
     rng = random.Random(123)
     tags = ["PFAS", "NO_PFAS", "PENDING", None]
     sources = ["NONE", "MANUAL", "OECD", "OPENAI", "VAI", "ECHA", "WEIRD", None]
-    rows = []
+    rows, clusters = [], {}
     for c in range(60):
-        has_init = rng.random() < 0.4
-        init = (
-            (f"chem:{c}", rng.choice(["YES", "NO", "PENDING"]),
-             rng.choice(["NONE", "MANUAL", "OECD", "OPENAI", "VAI", "ODD"]),
-             f"init name {c}", rng.choice([f"{c}-11-1", None]))
-            if has_init else (None, None, None, None, None)
-        )
-        seq = 0
+        key = f"cl-{c:03d}"
+        existing_id, init = None, None
+        if rng.random() < 0.4:
+            existing_id = f"chem:{c}"
+            init = (
+                rng.choice(["YES", "NO", "PENDING"]),
+                rng.choice(["NONE", "MANUAL", "OECD", "OPENAI", "VAI", "ODD"]),
+                f"init name {c}",
+                rng.choice([f"{c}-11-1", None]),
+            )
+        obs, seq = [], 0
         for d in range(rng.randrange(1, 5)):
             for _ in range(rng.randrange(1, 6)):
-                rows.append(
-                    (f"cl-{c:03d}", "m-1", f"doc-{d:03d}", seq,
-                     f"nm {rng.randrange(5)}",
+                obs.append(
+                    (f"doc-{d:03d}", seq, f"nm {rng.randrange(5)}",
                      rng.choice([f"{rng.randrange(50)}-00-0", None]),
-                     rng.choice(tags), rng.choice(sources)) + init
+                     rng.choice(tags), rng.choice(sources))
                 )
                 seq += 1
+        clusters[key] = (existing_id, init, obs)
+        rows += [(key, "m-1") + o + (existing_id,) + (init or (None,) * 4) for o in obs]
     df = spark.createDataFrame(
         rows,
         "cluster string, manufacturer_id string, doc_id string, seq int, "
@@ -207,9 +214,13 @@ def test_salted_fold_matches_sequential(spark):
         "existing_id string, init_status string, init_source string, "
         "init_name string, init_cas string",
     )
-    cols = ["cluster", "chem_id", "name", "cas_number", "manufacturer_id",
-            "pfas_status", "pfas_information_source", "n_dropped"]
-    plain = {tuple(r[c] for c in cols) for r in fold_chemical_nodes(df).collect()}
-    salted = {tuple(r[c] for c in cols) for r in fold_chemical_nodes_scalable(df).collect()}
-    missing, extra = plain - salted, salted - plain
-    assert plain == salted, f"missing={list(missing)[:3]} extra={list(extra)[:3]}"
+    got = {r["cluster"]: r for r in fold_chemical_nodes(df).collect()}
+    assert set(got) == set(clusters)
+    for key, (existing_id, init, obs) in clusters.items():
+        r = got[key]
+        assert (
+            r["name"], r["cas_number"], r["pfas_status"],
+            r["pfas_information_source"], r["n_dropped"],
+        ) == _python_fold(obs, init), key
+        if existing_id is not None:
+            assert r["chem_id"] == existing_id, key

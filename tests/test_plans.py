@@ -76,23 +76,32 @@ def test_extract_path_has_no_python_udf(spark):
     from entity_extractor_spark.operators import extract as X
 
     docs = generate_documents_df(spark, CorpusConfig(n_docs=10)).repartition(2, F.hash("doc_id"))
-    spans = X.text_spans(docs)
-    headers = X.parse_headers(spans)
-    chems = X.parse_chemicals(spans, headers)
+    parsed = X.parse_spans(X.text_spans(docs))
+    headers = X.resolve_headers(parsed)
+    chems = X.dedupe_chemicals(parsed).join(headers.select("doc_id"), "doc_id", "left_semi")
     winners = X.winner_docs(headers, chems.select("doc_id").distinct())
     plan = winners._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_sched_deps_superset_and_acyclic():
-    """Scheduling edges must contain every semantic dependency (a stage can
-    never start before its data exists) and stay acyclic (the event-driven
-    executor would deadlock on a cycle)."""
-    from entity_extractor_spark.plans.pipeline import SCHED_DEPS, STAGE_DEPS, STAGE_ORDER
+    """The single stage declaration is well formed: every dependency names
+    a declared stage, data dependencies precede their consumer in
+    STAGE_ORDER (resume invalidation walks that order), each builder takes
+    exactly its declared input tables, and the scheduling edges — a
+    superset of the data edges — are acyclic (the event-driven executor
+    would deadlock on a cycle)."""
+    import inspect
 
-    assert set(STAGE_DEPS) == set(STAGE_ORDER) == set(SCHED_DEPS)
-    for s, deps in STAGE_DEPS.items():
-        assert set(deps) <= set(SCHED_DEPS[s]), s
+    from entity_extractor_spark.plans.pipeline import STAGE_ORDER, STAGES
+
+    by_name = {s.name: s for s in STAGES}
+    assert list(by_name) == STAGE_ORDER
+    for s in STAGES:
+        assert set(s.deps) <= set(s.sched_deps) <= set(by_name), s.name
+        assert all(STAGE_ORDER.index(d) < STAGE_ORDER.index(s.name) for d in s.deps), s.name
+        params = list(inspect.signature(s.build).parameters)
+        assert params[0] == "run" and set(params[1:]) == set(s.deps), s.name
 
     seen: dict[str, int] = {}  # 0=visiting, 1=done
 
@@ -102,7 +111,7 @@ def test_sched_deps_superset_and_acyclic():
         if s in seen:
             return
         seen[s] = 0
-        for d in SCHED_DEPS[s]:
+        for d in by_name[s].sched_deps:
             visit(d)
         seen[s] = 1
 
@@ -162,7 +171,7 @@ def test_doc_window_reuses_corpus_partitioning(spark):
         4, F.col("doc_id")
     )
     plan = (
-        X.parse_headers(X.text_spans(docs))
+        X.resolve_headers(X.parse_spans(X.text_spans(docs)))
         ._jdf.queryExecution().executedPlan().toString()
     )
     # exactly the one explicit repartition exchange; the agg reuses it
