@@ -20,6 +20,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+
+NODE_COLS = ("id", "name", "node_type", "cas_number", "manufacturer_id",
+             "pfas_status", "pfas_information_source")
+
+
+def chemical_node_rows(chem_nodes: DataFrame) -> DataFrame:
+    """Folded chemical nodes as node-table rows (NODE_COLS)."""
+    return chem_nodes.select(
+        F.col("chem_id").alias("id"), "name", F.lit("CHEMICAL").alias("node_type"), *NODE_COLS[3:]
+    )
+
+
+def material_nodes(materials: DataFrame, edges: DataFrame, chem_nodes: DataFrame) -> DataFrame:
+    """Materials with their resolved status/source; PENDING/NONE when no
+    chemical resolves them."""
+    resolved = resolve_materials(edges, chem_nodes)
+    return (
+        materials.drop("pfas_status", "pfas_information_source")
+        .join(resolved, materials["id"] == resolved["material_id"], "left")
+        .drop("material_id")
+        .fillna({"pfas_status": "PENDING", "pfas_information_source": "NONE"})
+    )
+
+
 def resolve_materials(edges: DataFrame, chem_nodes: DataFrame) -> DataFrame:
     """edges(material_id, cluster, weight) x chem_nodes(cluster, status,
     source) -> (material_id, pfas_status, pfas_information_source)."""

@@ -116,28 +116,8 @@ def _edges(run: _Run, clustered: DataFrame) -> DataFrame:
 
 # s6 — propagate + s7 — materialize node/triple tables
 def _nodes(run: _Run, materials: DataFrame, chem_nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    resolved = P.resolve_materials(edges, chem_nodes)
-    mats = (
-        materials
-        .drop("pfas_status", "pfas_information_source")
-        .join(resolved, materials["id"] == resolved["material_id"], "left")
-        .drop("material_id")
-        .fillna({"pfas_status": "PENDING", "pfas_information_source": "NONE"})
-        .select(
-            "id", "name", "node_type", "cas_number", "manufacturer_id",
-            "pfas_status", "pfas_information_source",
-        )
-    )
-    chem = chem_nodes.select(
-        F.col("chem_id").alias("id"),
-        "name",
-        F.lit("CHEMICAL").alias("node_type"),
-        "cas_number",
-        "manufacturer_id",
-        "pfas_status",
-        "pfas_information_source",
-    )
-    return mats.unionByName(chem)
+    mats = P.material_nodes(materials, edges, chem_nodes).select(*P.NODE_COLS)
+    return mats.unionByName(P.chemical_node_rows(chem_nodes))
 
 
 def _triples(

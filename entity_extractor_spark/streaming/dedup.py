@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedupe as D
 from ..schemas import DOCUMENTS_SCHEMA
-from .stateio import compact_batches, read_state
+from .stateio import batch_dir, compact_batches, read_state, run_stream
 
 IDX_SCHEMA = "doc_id bigint, band int, bucket string"
 DEC_SCHEMA = "doc_id bigint, keeper bigint, is_dup boolean"
@@ -49,19 +49,14 @@ def _dec_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "decisions")
 
 
-
 def read_index(
     spark: SparkSession, out_dir: str, before_batch: int | None = None
 ) -> DataFrame | None:
     """The accumulated (doc_id, band, bucket) index of kept documents;
     restricted to batches < before_batch so a redelivered batch never sees
     contributions from its own future."""
-    df = read_state(spark, IDX_SCHEMA, _idx_dir(out_dir))
-    if df is None:
-        return None
-    if before_batch is not None:
-        df = df.where(F.col("_batch") < F.lit(int(before_batch)))
-    return df.drop("_batch")
+    df = read_state(spark, IDX_SCHEMA, _idx_dir(out_dir), before_batch=before_batch)
+    return None if df is None else df.drop("_batch")
 
 
 def dedup_batch(
@@ -115,12 +110,12 @@ def dedup_batch(
             )
         )
 
-    dec_path = os.path.join(_dec_dir(out_dir), f"batch_{int(batch_id):06d}")
+    dec_path = batch_dir(_dec_dir(out_dir), batch_id)
     decisions.write.mode("overwrite").parquet(dec_path)
     committed = spark.read.schema(DEC_SCHEMA).parquet(dec_path)
     kept_buckets = buckets.join(committed.where(~F.col("is_dup")).select("doc_id"), "doc_id")
     kept_buckets.select("doc_id", "band", "bucket").write.mode("overwrite").parquet(
-        os.path.join(_idx_dir(out_dir), f"batch_{int(batch_id):06d}")
+        batch_dir(_idx_dir(out_dir), batch_id)
     )
     return committed
 
@@ -141,6 +136,34 @@ def compact_state(spark: SparkSession, out_dir: str) -> None:
     compact_batches(spark, DEC_SCHEMA, _dec_dir(out_dir))
 
 
+def _corpus_docs(batch_df: DataFrame) -> DataFrame:
+    """Corpus documents (doc_id 'doc-%08d', spans) -> (numeric doc_id, as the
+    decision path orders keepers numerically; text = the joined text spans)."""
+    # A doc_id without a trailing numeric suffix would extract to ''
+    # -> NULL -> the row silently vanishes from BOTH the kept set and
+    # the dup decisions (NULL never equals the keeper). Ids outside the
+    # corpus convention must fail the batch loudly, not lose data.
+    num = F.regexp_extract("doc_id", r"(\d+)$", 1)
+    checked = F.when(num != "", num.cast("bigint")).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("stream dedup: doc_id has no numeric suffix: "),
+                F.col("doc_id"),
+            )
+        )
+    )
+    return batch_df.select(
+        checked.alias("doc_id"),
+        F.array_join(
+            F.transform(
+                F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
+                lambda s: s["text"],
+            ),
+            " ",
+        ).alias("text"),
+    )
+
+
 def dedup_stream(
     spark: SparkSession,
     input_dir: str,
@@ -149,53 +172,13 @@ def dedup_stream(
     available_now: bool = True,
     compact_every: int | None = None,
 ):
-    """Structured-Streaming wiring: every arriving documents parquet file
-    flows through dedup_batch via foreachBatch (checkpointed batch ids, so
-    restarts redeliver idempotently). Documents carry the corpus shape
-    (doc_id 'doc-%08d', spans); text = concatenated text spans — the same
-    surface the batch dedup ops see — and the numeric id is extracted from
-    the corpus id format (the decision path orders keepers numerically,
-    dedupe.dedup_canonical)."""
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # A doc_id without a trailing numeric suffix would extract to ''
-        # -> NULL -> the row silently vanishes from BOTH the kept set and
-        # the dup decisions (NULL never equals the keeper). Ids outside the
-        # corpus convention must fail the batch loudly, not lose data.
-        num = F.regexp_extract("doc_id", r"(\d+)$", 1)
-        checked = F.when(num != "", num.cast("bigint")).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("stream dedup: doc_id has no numeric suffix: "),
-                    F.col("doc_id"),
-                )
-            )
-        )
-        docs = batch_df.select(
-            checked.alias("doc_id"),
-            F.array_join(
-                F.transform(
-                    F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
-                    lambda s: s["text"],
-                ),
-                " ",
-            ).alias("text"),
-        )
-        dedup_batch(spark, docs, int(batch_id), out_dir)
-        # periodic maintenance on the stream's own cadence: accumulator
-        # reads stay O(1) in stream lifetime instead of O(#batches)
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            compact_state(spark, out_dir)
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", os.path.join(out_dir, "_checkpoint")
+    """Structured-Streaming wiring (stateio.run_stream): every arriving
+    documents parquet file flows through dedup_batch via foreachBatch
+    (checkpointed batch ids, so restarts redeliver idempotently);
+    compact_every=K compacts both accumulators every K batches."""
+    return run_stream(
+        spark, DOCUMENTS_SCHEMA, input_dir, out_dir,
+        lambda df, b: dedup_batch(spark, _corpus_docs(df), b, out_dir),
+        lambda: compact_state(spark, out_dir),
+        max_files_per_trigger, available_now, compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

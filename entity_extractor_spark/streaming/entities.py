@@ -16,11 +16,11 @@ actually changed plus brand-new vertices.
 State layout (stateio accumulator protocol, portable to any Hadoop URI):
   cc_labels/batch_NNNNNN — per-batch label deltas (vertex, component);
   the CURRENT label of a vertex is its newest delta row —
-  last-writer-wins by _batch, folded with ONE algebraic struct-max agg
-  (the apply_changelog shape: no window, hot vertices collapse
-  map-side). Compaction (stateio.compact_batches) keeps _batch as a
-  real column, so the fold — and the redelivery fence below — survive
-  compaction unchanged.
+  last-writer-wins by _batch, stateio.read_state's keyed read (ONE
+  algebraic struct-max agg: no window, hot vertices collapse map-side).
+  Compaction (stateio.compact_batches) keeps _batch as a real column, so
+  the fold — and the redelivery fence below — survive compaction
+  unchanged.
 
 Idempotency (T5): a batch reads only deltas from strictly earlier
 batches (_batch < batch_id) and overwrites its own delta dir, so
@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import graph as G
-from .stateio import compact_batches, read_state
+from .stateio import batch_dir, compact_batches, read_state, run_stream
 
 LAB_SCHEMA = "vertex string, component string"
 EDGES_SCHEMA = "src string, dst string"
@@ -57,22 +57,11 @@ def read_labels(
     spark: SparkSession, out_dir: str, before_batch: int | None = None
 ) -> DataFrame | None:
     """Current (vertex, component) labels: last-writer-wins fold of the
-    accumulated per-batch deltas (newest _batch wins, one algebraic
-    struct-max agg). `before_batch` fences to strictly earlier batches
+    accumulated per-batch deltas (stateio.read_state keyed on vertex:
+    newest _batch wins). `before_batch` fences to strictly earlier batches
     so a redelivered batch never sees its own future."""
-    df = read_state(spark, LAB_SCHEMA, _lab_dir(out_dir))
-    if df is None:
-        return None
-    if before_batch is not None:
-        df = df.where(F.col("_batch") < F.lit(int(before_batch)))
-    return (
-        df.groupBy("vertex")
-        .agg(
-            F.max(
-                F.struct(F.col("_batch").alias("b"), F.col("component").alias("c"))
-            ).alias("_w")
-        )
-        .select("vertex", F.col("_w.c").alias("component"))
+    return read_state(
+        spark, LAB_SCHEMA, _lab_dir(out_dir), key="vertex", before_batch=before_batch
     )
 
 
@@ -103,7 +92,7 @@ def cc_batch(
         )
     # cut lineage from the state dirs BEFORE overwriting one of them
     delta = delta.localCheckpoint(eager=True)
-    path = os.path.join(_lab_dir(out_dir), f"batch_{int(batch_id):06d}")
+    path = batch_dir(_lab_dir(out_dir), batch_id)
     delta.write.mode("overwrite").parquet(path)
     return spark.read.schema(LAB_SCHEMA).parquet(path)
 
@@ -124,24 +113,12 @@ def entity_stream(
     available_now: bool = True,
     compact_every: int | None = None,
 ):
-    """Structured-Streaming wiring: every arriving (src, dst) edge
-    parquet file flows through cc_batch via foreachBatch (checkpointed
-    batch ids => idempotent redelivery after restart)."""
-    reader = spark.readStream.schema(EDGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cc_batch(spark, batch_df, int(batch_id), out_dir)
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            compact_state(spark, out_dir)
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", os.path.join(out_dir, "_checkpoint")
+    """Structured-Streaming wiring (stateio.run_stream): every arriving
+    (src, dst) edge parquet file flows through cc_batch via foreachBatch
+    (checkpointed batch ids => idempotent redelivery after restart)."""
+    return run_stream(
+        spark, EDGES_SCHEMA, input_dir, out_dir,
+        lambda df, b: cc_batch(spark, df, b, out_dir),
+        lambda: compact_state(spark, out_dir),
+        max_files_per_trigger, available_now, compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

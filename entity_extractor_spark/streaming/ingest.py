@@ -17,10 +17,10 @@ Semantics reproduced:
     idempotent stage commits cover redelivery.
 
 Scale notes: one micro-batch = one run of the batch DAG (all-stage
-parallelism applies within a batch); the accumulator is a parquet dir
-partitioned by batch (each batch overwrites only its own subdir =>
-idempotent under reprocessing). On Iceberg the accumulator is a MERGE INTO
-per batch.
+parallelism applies within a batch); state follows the stateio layout and
+read (each batch overwrites only its own subdir => idempotent under
+reprocessing; a node's current state is its newest batch's row, for the
+MERGE input and consolidation alike). On Iceberg: a MERGE INTO per batch.
 """
 
 from __future__ import annotations
@@ -30,24 +30,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import propagate as P
 from ..plans.pipeline import run_pipeline
-from ..schemas import DOCUMENTS_SCHEMA
-from .stateio import compact_batches, read_glob, read_state
+from ..schemas import DOCUMENTS_SCHEMA, TRIPLES_SCHEMA
+from .stateio import batch_dir, compact_batches, file_stream, read_state, run_stream
 
-ACC_SCHEMA = (
-    "id string, name string, node_type string, cas_number string, "
-    "manufacturer_id string, manufacturer_name string, "
-    "pfas_status string, pfas_information_source string"
-)
+# node-table columns plus the material's manufacturer_name (J7 identity key)
+ACC_SCHEMA = ", ".join(f"{c} string" for c in (*P.NODE_COLS, "manufacturer_name"))
 
 
 def queue_stream(spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream of documents parquet: every new file under
     input_dir is an arriving queue message batch."""
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_dir)
+    return file_stream(spark, DOCUMENTS_SCHEMA, input_dir, max_files_per_trigger)
 
 
 def _acc_dir(out_dir: str) -> str:
@@ -55,13 +50,11 @@ def _acc_dir(out_dir: str) -> str:
 
 
 def read_accumulated_nodes(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Current accumulated node state of a streaming ingest dir (newest
-    compaction + live batch tail), or None before the first batch."""
-    # Probes go through the Spark reader (not driver-local os.path) so the
-    # accumulator works on any Hadoop URI; reads see the newest compaction
-    # plus the live batch tail (stateio.read_state).
-    df = read_state(spark, ACC_SCHEMA, _acc_dir(out_dir))
-    return None if df is None else df.drop("_batch")
+    """Current node state of a streaming ingest dir — exactly one row per
+    id, the newest batch's (stateio.read_state over the newest compaction
+    plus the live batch tail) — or None before the first batch. This is
+    the `existing_nodes` every MERGE batch folds onto."""
+    return read_state(spark, ACC_SCHEMA, _acc_dir(out_dir), key="id")
 
 
 def compact_nodes(spark: SparkSession, out_dir: str) -> None:
@@ -79,31 +72,17 @@ def process_batch(
     gazetteer: list[dict] | None = None,
 ) -> dict[str, DataFrame]:
     """One micro-batch through the batch DAG, merging into prior state."""
-    bdir = os.path.join(out_dir, f"batch_{batch_id:06d}")
-    existing = read_accumulated_nodes(spark, out_dir)
     tables = run_pipeline(
-        spark, batch_df, bdir, gazetteer=gazetteer, existing_nodes=existing
+        spark, batch_df, batch_dir(out_dir, batch_id), gazetteer=gazetteer,
+        existing_nodes=read_accumulated_nodes(spark, out_dir),
     )
     # accumulate this batch's node identities (material rows keep their
     # manufacturer_name: the J7 identity probe needs it); overwrite-by-batch
     # subdir => reprocessing the same batch id is a no-op
-    mats = tables["materials"].select(
-        "id", "name", "node_type", "cas_number", "manufacturer_id",
-        "manufacturer_name", "pfas_status", "pfas_information_source",
+    acc = tables["materials"].select(*P.NODE_COLS, "manufacturer_name").unionByName(
+        P.chemical_node_rows(tables["chem_nodes"]), allowMissingColumns=True
     )
-    chems = tables["chem_nodes"].select(
-        F.col("chem_id").alias("id"),
-        "name",
-        F.lit("CHEMICAL").alias("node_type"),
-        "cas_number",
-        "manufacturer_id",
-        F.lit(None).cast("string").alias("manufacturer_name"),
-        "pfas_status",
-        "pfas_information_source",
-    )
-    mats.unionByName(chems).write.mode("overwrite").parquet(
-        os.path.join(_acc_dir(out_dir), f"batch_{batch_id:06d}")
-    )
+    acc.write.mode("overwrite").parquet(batch_dir(_acc_dir(out_dir), batch_id))
     return tables
 
 
@@ -120,94 +99,40 @@ def streaming_ingest(
     backlog then stops (the batch-test trigger). Returns the StreamingQuery.
     compact_every=K folds the node accumulator's batch subdirs into one
     compact dir every K batches (stateio commit protocol — crash-safe)."""
-    stream = queue_stream(spark, input_dir, max_files_per_trigger)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        process_batch(spark, batch_df, int(batch_id), out_dir, gazetteer)
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            compact_nodes(spark, out_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
+    return run_stream(
+        spark, DOCUMENTS_SCHEMA, input_dir, out_dir,
+        lambda df, b: process_batch(spark, df, b, out_dir, gazetteer),
+        lambda: compact_nodes(spark, out_dir),
+        max_files_per_trigger, available_now, compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def consolidated(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     """Cross-batch consolidated graph tables.
 
-    nodes: chemical rows keep only their LATEST batch state (each batch
-    re-folded from the prior state, so the last write per id is the total
-    fold); material rows are unique by construction (first-batch-wins).
-    triples: union of per-batch triples; hasChemical edges deduped to the
-    latest batch's weight (J8 upsert), evidencedBy/manufacturedBy are
-    append-only and unique."""
-    nodes = read_state(spark, ACC_SCHEMA, _acc_dir(out_dir))
+    nodes: read_accumulated_nodes (a chemical's newest row is its total
+    fold), material statuses re-resolved below. triples: the newest batch's
+    row per (subj_id, pred, obj_id), ONE glob scan over every batch's
+    triples — hasChemical weights upsert to the latest batch (J8),
+    evidencedBy/manufacturedBy are append-only and unique."""
+    nodes = read_accumulated_nodes(spark, out_dir)
     if nodes is None:
         raise FileNotFoundError(f"no committed batches under {out_dir}")
-    nodes = nodes.withColumnRenamed("_batch", "_b")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id").orderBy(F.desc("_b"))
-    nodes = (
-        nodes.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn", "_b")
+    triples = read_state(
+        spark, TRIPLES_SCHEMA, out_dir, key=("subj_id", "pred", "obj_id"), table="triples"
     )
-
-    # ONE glob scan over every committed batch's triples (a per-batch union
-    # loop grows the plan linearly with batch count — at thousands of
-    # micro-batches that is a driver/lineage bottleneck); the batch id is
-    # derived from the file path, exactly as the nodes read above.
-    from ..schemas import TRIPLES_SCHEMA
-
-    triples = read_glob(
-        spark, TRIPLES_SCHEMA, os.path.join(out_dir, "batch_*", "triples")
-    )
-    if triples is not None:
-        triples = triples.withColumn(
-            # INT batch id (a string compare mis-orders once ids reach 7
-            # digits: 'batch_1000000' < 'batch_999999' lexicographically),
-            # anchored to the parquet file's own parent chain so an out_dir
-            # containing /batch_NNN/ can't hijack the id
-            "_b",
-            F.regexp_extract(
-                F.input_file_name(), r"/batch_(\d+)/triples/[^/]*$", 1
-            ).cast("int"),
-        )
-    if triples is not None:
-        wt = Window.partitionBy("subj_id", "pred", "obj_id").orderBy(F.desc("_b"))
-        triples = (
-            triples.withColumn("_rn", F.row_number().over(wt))
-            .where("_rn = 1")
-            .drop("_rn", "_b")
-        )
+    if triples is None:
+        return {"nodes": nodes, "triples": None}
 
     # Material statuses depend on the CURRENT states of their chemicals
     # (the reference re-resolves affected materials after every chemical
     # update, artifact_ingestor_service.py:1108-1145); recompute the A3/A4
     # fold globally over consolidated edges + final chemical states.
-    if triples is not None:
-        from ..operators.propagate import resolve_materials
-
-        chem_states = nodes.where("node_type = 'CHEMICAL'").select(
-            F.col("id").alias("cluster"), "pfas_status", "pfas_information_source"
-        )
-        edges = triples.where("pred = 'hasChemical'").select(
-            F.col("subj_id").alias("material_id"), F.col("obj_id").alias("cluster")
-        )
-        resolved = resolve_materials(edges, chem_states)
-        mats = (
-            nodes.where("node_type = 'MATERIAL'")
-            .drop("pfas_status", "pfas_information_source")
-            .join(resolved, F.col("id") == resolved["material_id"], "left")
-            .drop("material_id")
-            .fillna({"pfas_status": "PENDING", "pfas_information_source": "NONE"})
-        )
-        nodes = mats.select(*[c for c in nodes.columns]).unionByName(
-            nodes.where("node_type = 'CHEMICAL'")
-        )
-    return {"nodes": nodes, "triples": triples}
+    chem = nodes.where("node_type = 'CHEMICAL'")
+    edges = triples.where("pred = 'hasChemical'").select(
+        F.col("subj_id").alias("material_id"), F.col("obj_id").alias("cluster")
+    )
+    mats = P.material_nodes(
+        nodes.where("node_type = 'MATERIAL'"), edges, chem.withColumnRenamed("id", "cluster")
+    )
+    return {"nodes": mats.select(*nodes.columns).unionByName(chem), "triples": triples}

@@ -1,4 +1,6 @@
-"""Shared state-dir IO for the streaming accumulators (ingest + dedup).
+"""The one owner of streaming accumulator state (ingest, dedup, entity
+CC): the batch_NNNNNN dir layout, the state read (a keyed state's current
+value is its newest batch's row) and the foreachBatch stream wiring.
 
 ALL filesystem access — reads, existence probes, listings, deletes,
 manifest IO — goes through the Spark reader or the JVM's Hadoop
@@ -10,14 +12,18 @@ accumulating graph DB the queue consumer merges into
 
 from __future__ import annotations
 
+import functools as _functools
 import json as _json
 import os as _os
 import re as _re
+from typing import Callable, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _BATCH_COL = "_batch"
+_BATCH_RE = _re.compile(r"batch_(\d+)")
 # versioned manifests: _compaction_NNNNNN.json, newest (max cutoff) wins.
 # A new manifest is CREATED (atomically visible on close/PUT on HDFS/S3A)
 # rather than renamed over the old one — rename-overwrite is not atomic on
@@ -31,8 +37,6 @@ _MANIFEST_RE = _re.compile(r"_compaction_(\d+)\.json")
 def read_glob(spark: SparkSession, schema, pattern: str) -> DataFrame | None:
     """Glob read that returns None when no matching dir/file exists yet
     (instead of raising PATH_NOT_FOUND)."""
-    from pyspark.errors import AnalysisException
-
     try:
         df = spark.read.schema(schema).parquet(pattern)
         df.schema  # force path resolution so a missing glob raises here
@@ -41,16 +45,29 @@ def read_glob(spark: SparkSession, schema, pattern: str) -> DataFrame | None:
         return None
 
 
+# ----------------------------------------------------------- batch layout --
+def batch_dir(root: str, batch_id: int) -> str:
+    """The dir micro-batch `batch_id` commits into: root/batch_NNNNNN."""
+    return _os.path.join(root, f"batch_{int(batch_id):06d}")
+
+
+def _with_batch(df: DataFrame, table: str | None = None) -> DataFrame:
+    # int `_batch` from /batch_N/<file> (or /batch_N/<table>/<file>),
+    # anchored to the file's own parent chain — a root that itself contains
+    # a /batch_NNN/ segment must not hijack the id; an int, so 7-digit ids
+    # order after 6-digit ones
+    sub = "" if table is None else _re.escape(table) + "/"
+    return df.withColumn(
+        _BATCH_COL,
+        F.regexp_extract(F.input_file_name(), f"/{_BATCH_RE.pattern}/{sub}[^/]*$", 1).cast("int"),
+    )
+
+
 # ---------------------------------------------------------- hadoop fs ops --
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm, jpath
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    fs, _, p = _fs(spark, path)
-    return bool(fs.exists(p))
 
 
 def _list_names(spark: SparkSession, dir_path: str) -> list[str]:
@@ -138,19 +155,16 @@ def compacted_upto(spark: SparkSession, acc_dir: str) -> int | None:
     return int(body["upto"])
 
 
-def _with_batch_from_path(df):
-    # anchored to the parquet file's IMMEDIATE parent dir — an out_dir that
-    # itself contains a /batch_NNN/ segment must not hijack the id
-    return df.withColumn(
-        _BATCH_COL,
-        F.regexp_extract(F.input_file_name(), r"/batch_(\d+)/[^/]*$", 1).cast("int"),
-    )
-
-
-def read_state(spark: SparkSession, schema, acc_dir: str) -> DataFrame | None:
+def read_state(
+    spark: SparkSession, schema, acc_dir: str, key: str | Sequence[str] | None = None,
+    before_batch: int | None = None, table: str | None = None,
+) -> DataFrame | None:
     """Accumulated state as (data columns..., _batch int): the newest
-    compaction plus every live batch dir AFTER its cutoff. None when no
-    state has ever been committed."""
+    compaction plus every live batch dir AFTER its cutoff (or the per-batch
+    `table` under each batch dir), fenced to batches < before_batch. With
+    `key`, the CURRENT state instead: each key's newest-batch row, without
+    _batch (one algebraic struct-max agg). None when no state has ever
+    been committed."""
     upto = compacted_upto(spark, acc_dir)
     parts = []
     if upto is not None:
@@ -162,9 +176,12 @@ def read_state(spark: SparkSession, schema, acc_dir: str) -> DataFrame | None:
         )
         if compact is not None:
             parts.append(compact)
-    live = read_glob(spark, schema, _os.path.join(acc_dir, "batch_*"))
+    pattern = _os.path.join(acc_dir, "batch_*")
+    if table is not None:
+        pattern = _os.path.join(pattern, table)
+    live = read_glob(spark, schema, pattern)
     if live is not None:
-        live = _with_batch_from_path(live)
+        live = _with_batch(live, table)
         if upto is not None:
             # covered dirs may linger after a crash between manifest commit
             # and deletion — never double-count them
@@ -172,10 +189,18 @@ def read_state(spark: SparkSession, schema, acc_dir: str) -> DataFrame | None:
         parts.append(live)
     if not parts:
         return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    out = _functools.reduce(DataFrame.unionByName, parts)
+    if before_batch is not None:
+        out = out.where(F.col(_BATCH_COL) < F.lit(int(before_batch)))
+    if key is None:
+        return out
+    keys = [key] if isinstance(key, str) else list(key)
+    rest = [c for c in out.columns if c not in keys and c != _BATCH_COL]
+    return (
+        out.groupBy(*keys)
+        .agg(F.max(F.struct(_BATCH_COL, *rest)).alias("_w"))
+        .select(*keys, *[F.col(f"_w.{c}").alias(c) for c in rest])
+    )
 
 
 def compact_batches(spark: SparkSession, schema, acc_dir: str) -> int | None:
@@ -183,14 +208,11 @@ def compact_batches(spark: SparkSession, schema, acc_dir: str) -> int | None:
     compaction) into one compact dir; returns the new cutoff, or None if
     there is nothing to compact. Single-writer maintenance op (run it from
     the stream's own foreachBatch cadence or a side job between batches)."""
-    names = _list_names(spark, acc_dir)
-    if not names:
-        return None
-    batch_ids = sorted(
-        int(m.group(1)) for d in names if (m := _re.fullmatch(r"batch_(\d+)", d))
-    )
     prev = compacted_upto(spark, acc_dir)
-    live_ids = [b for b in batch_ids if prev is None or b > prev]
+    live_ids = [
+        int(m.group(1)) for d in _list_names(spark, acc_dir)
+        if (m := _BATCH_RE.fullmatch(d)) and (prev is None or int(m.group(1)) > prev)
+    ]
     if not live_ids:
         return prev
     upto = max(live_ids)
@@ -212,18 +234,55 @@ def compact_batches(spark: SparkSession, schema, acc_dir: str) -> int | None:
     # Delete EVERY covered batch dir <= upto — not just this round's live
     # set — so a boundary batch dir recreated by a redelivered micro-batch
     # after an earlier compaction is eventually removed too.
+    # A compact tmp from a crashed earlier attempt never reached a manifest
+    # — invisible to readers, but still disk to reclaim.
     for d in _list_names(spark, acc_dir):
-        m = _re.fullmatch(r"batch_(\d+)", d)
-        if m and int(m.group(1)) <= upto:
-            _delete(spark, _os.path.join(acc_dir, d))
-        mc = _re.fullmatch(r"compact_(\d+)", d)
-        if mc and int(mc.group(1)) != upto:
-            _delete(spark, _os.path.join(acc_dir, d))
-        mm = _MANIFEST_RE.fullmatch(d)
-        if mm and int(mm.group(1)) != upto:
-            _delete(spark, _os.path.join(acc_dir, d))
-        if d.endswith("._tmp") and d != _os.path.basename(tmp):
-            # a compact tmp from a crashed earlier attempt never reached a
-            # manifest — invisible to readers, but still disk to reclaim
+        covered = _BATCH_RE.fullmatch(d)
+        older = _re.fullmatch(r"compact_(\d+)", d) or _MANIFEST_RE.fullmatch(d)
+        if (
+            (covered and int(covered.group(1)) <= upto)
+            or (older and int(older.group(1)) != upto)
+            or (d.endswith("._tmp") and d != _os.path.basename(tmp))
+        ):
             _delete(spark, _os.path.join(acc_dir, d))
     return upto
+
+
+# ----------------------------------------------------------------- wiring --
+def file_stream(
+    spark: SparkSession, schema, input_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """File-source stream of parquet files: every new file under input_dir
+    is an arriving micro-batch."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(input_dir)
+
+
+def run_stream(
+    spark: SparkSession, schema, input_dir: str, out_dir: str,
+    per_batch: Callable[[DataFrame, int], object], compact: Callable[[], object],
+    max_files_per_trigger: int | None = None, available_now: bool = True,
+    compact_every: int | None = None,
+):
+    """Start the foreachBatch stream (checkpointed under out_dir, so a
+    restart redelivers idempotently): each non-empty micro-batch goes to
+    per_batch(df, batch_id), then compact() every compact_every batches.
+    available_now=True processes the backlog then stops."""
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        per_batch(batch_df, int(batch_id))
+        if compact_every and (int(batch_id) + 1) % compact_every == 0:
+            compact()
+
+    writer = (
+        file_stream(spark, schema, input_dir, max_files_per_trigger)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", _os.path.join(out_dir, "_checkpoint"))
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

@@ -2,7 +2,7 @@
 the monitoring surface of the streaming ingest (reference: the queue
 consumer reports running counts per folder upload as batches land,
 folder_reader_service.py:140-151; re-expressed as the standard Structured
-Streaming pattern: readStream -> withWatermark -> window -> writeStream).
+Streaming pattern: readStream -> withWatermark -> window -> sink).
 
 Semantics:
   * each arriving document batch carries an event timestamp (`event_ts`);

@@ -148,3 +148,36 @@ def test_redelivered_covered_batch_dir_removed_by_next_compaction(spark, tmp_pat
     assert dirs == []  # the recreated batch_000002 is gone too
     after = [(k, v, b) for (k, v, b) in _rows(read_state(spark, SCHEMA, acc)) if b <= 2]
     assert after == before
+
+
+def test_keyed_read_is_newest_row_per_key(spark, tmp_path):
+    """read_state(key=...) keeps each key's newest-batch row (not the
+    smallest value), honours the before_batch fence, and answers the
+    same across a compaction."""
+    acc = str(tmp_path / "acc")
+    for b, v in enumerate(["b", "c", "a"]):  # newest value is the smallest
+        spark.createDataFrame([(1, v), (b + 10, v)], SCHEMA).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(acc, f"batch_{b:06d}"))
+
+    def cur(**kw):
+        df = read_state(spark, SCHEMA, acc, key="k", **kw)
+        assert "_batch" not in df.columns
+        return sorted((r["k"], r["v"]) for r in df.collect())
+
+    want = [(1, "a"), (10, "b"), (11, "c"), (12, "a")]
+    assert cur() == want
+    assert cur(before_batch=2) == [(1, "c"), (10, "b"), (11, "c")]
+    compact_batches(spark, SCHEMA, acc)
+    assert cur() == want
+
+
+def test_per_batch_table_read_anchors_on_table_dir(spark, tmp_path):
+    """`table` reads root/batch_N/<table> with _batch from that layout."""
+    root = str(tmp_path / "batch_000042" / "out")
+    for b in (0, 3):
+        spark.createDataFrame([(b, f"t{b}")], SCHEMA).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(root, f"batch_{b:06d}", "triples"))
+    got = _rows(read_state(spark, SCHEMA, root, table="triples"))
+    assert got == [(0, "t0", 0), (3, "t3", 3)]

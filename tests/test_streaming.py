@@ -20,10 +20,13 @@ from entity_extractor_spark.oracle import finalize, ingest_corpus
 from entity_extractor_spark.streaming.ingest import (
     consolidated,
     process_batch,
+    read_accumulated_nodes,
     streaming_ingest,
 )
 
-CFG = CorpusConfig(n_docs=120)
+# 3 x 100 docs: enough chemicals recur across >= 3 batches that a MERGE
+# reading anything but the newest accumulated row per id drifts in status
+CFG = CorpusConfig(n_docs=300, seed=1)
 
 
 def _write_batches(spark, tmp_path, n_batches=3):
@@ -171,6 +174,9 @@ def test_consolidated_single_scan_50_batches(spark, tmp_path):
     nodes = {r["id"]: r for r in tables["nodes"].collect()}
     assert nodes["c1"]["pfas_status"] == "YES"
     assert nodes["m1"]["pfas_status"] == "YES"  # re-folded from final chem state
+    # the state the next MERGE reads holds exactly the newest row per id
+    c1 = read_accumulated_nodes(spark, out_dir).where("id = 'c1'").collect()
+    assert [r["pfas_status"] for r in c1] == ["YES"]
 
 
 def test_stateful_first_delivery_dedupe(spark, tmp_path):
