@@ -3,7 +3,7 @@
 Runs the headline workload on local[$SPARK_GRAFT_CPUS] against
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and prints ONE JSON
 line: {"metric", "value" (total sec), "unit": "sec", "queries": {name: sec},
-"sf", plus extra context keys (triples_per_sec, docs, cpus)}.
+"sf", plus extra context keys (triples_per_sec, jobs_per_run, docs, cpus)}.
 
 Headline = the KG-construction pipeline (BASELINE.json metric is triples/sec
 end-to-end on the synthetic interleaved-doc corpus) + a representative slice
@@ -301,15 +301,22 @@ def main() -> None:
     n_in = docs.count()  # materialize input outside the timed window
     e2e_runs: list[float] = []
     n_triples = 0
+    # Spark jobs launched by one run (the scheduler's job counter; the
+    # fixed orchestration cost, independent of corpus size)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs_per_run = None
     for _ in range(max(1, E2E_REPS)):
         out_dir = tempfile.mkdtemp(prefix="kg_bench_")
         try:
             t0 = time.time()
+            j0 = sched.numTotalJobs()
             tables = run_pipeline(
                 spark, docs, out_dir, gazetteer=gazetteer_rows(cfg), resume=False
             )
             n_triples = tables["triples"].count()
             e2e_runs.append(round(time.time() - t0, 3))
+            if jobs_per_run is None:
+                jobs_per_run = sched.numTotalJobs() - j0
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
     kg_sec = min(e2e_runs)
@@ -377,6 +384,7 @@ def main() -> None:
                 "kg_docs": n_in,
                 "warmup_sec": warmup_sec,
                 "runs": e2e_runs,
+                "jobs_per_run": jobs_per_run,
                 "query_runs": query_runs,
                 "probe_sec": min(probe_runs),
                 "probe_runs": probe_runs,

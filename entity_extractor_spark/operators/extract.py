@@ -24,11 +24,6 @@ from pyspark.sql import functions as F
 
 from ..functions.core import cas_trim_or_null, display_name, entity_id, norm_name
 
-# ~2M 60-byte keys ~ 120 MB broadcast — comfortably inside executor/driver
-# budgets; past this the anti-join falls back to a shuffle (AQE may still
-# pick broadcast while the actual build side stays small).
-EXISTING_KEYS_BROADCAST_MAX = 2_000_000
-
 HEADER_RE = (
     r"^(.*?)(?: \(P/N ([^)]*)\))?(?: \(UPC ([^)]*)\))?"
     r" manufactured by ([^,]*), ([^,]*), ([^,]*)$"
@@ -102,17 +97,21 @@ def parse_spans(spans: DataFrame) -> DataFrame:
 
 
 def resolve_headers(parsed: DataFrame) -> DataFrame:
-    """One material header per doc: first matching span by offset, as an
-    ALGEBRAIC min(struct(offset, h)) aggregation — map-side combinable, so
-    at most one header row per doc ever crosses an exchange (the former
-    row_number window shuffled every candidate row and could not partial-
-    agg). Offsets are unique within a doc, so the lexicographic struct min
-    is exactly first-by-offset."""
+    """One material header per doc plus `has_chem` (the doc has >= 1
+    chemical line), as ONE per-doc aggregation. The header is the first
+    matching span by offset: an ALGEBRAIC min(struct(offset, h)) over the
+    header rows — map-side combinable, so at most one row per doc ever
+    crosses an exchange. Offsets are unique within a doc, so the
+    lexicographic struct min is exactly first-by-offset. Docs without a
+    header are dropped."""
     return (
-        parsed.where(F.col("h").isNotNull())
-        .groupBy("doc_id")
-        .agg(F.min(F.struct(F.col("offset"), F.col("h"))).alias("_m"))
-        .select("doc_id", "_m.h.*")
+        parsed.groupBy("doc_id")
+        .agg(
+            F.min(F.when(F.col("h").isNotNull(), F.struct(F.col("offset"), F.col("h")))).alias("_m"),
+            F.max(F.col("c").isNotNull()).alias("has_chem"),
+        )
+        .where(F.col("_m").isNotNull())
+        .select("doc_id", "_m.h.*", "has_chem")
         .withColumn(
             "display_name",
             display_name(F.col("material_name"), F.col("product_number"), F.col("upc_number")),
@@ -145,27 +144,24 @@ def dedupe_chemicals(parsed: DataFrame) -> DataFrame:
     )
 
 
-def winner_docs(headers: DataFrame, chem_counts: DataFrame, existing_material_keys: DataFrame | None = None) -> DataFrame:
+def winner_docs(headers: DataFrame, existing_material_keys: DataFrame | None = None) -> DataFrame:
     """Validation + J7 first-document-wins.
 
-    headers plus at-least-one-chemical docs compete per material key
+    Docs with a header (`resolve_headers`) and at least one chemical line
+    (its `has_chem` flag) compete per material key
     (norm(display_name), manufacturer_name); the minimum doc_id wins, every
     other doc is dropped whole. Docs whose key already exists in
-    `existing_material_keys(mat_key)` (prior ingest / MERGE) all lose."""
-    valid = headers.join(chem_counts, "doc_id", "left_semi").withColumn(
-        "mat_key", F.concat_ws("\x1f", norm_name(F.col("display_name")), F.col("manufacturer_name"))
+    `existing_material_keys(mat_key)` (prior ingest / MERGE) all lose; AQE
+    picks broadcast or shuffle for that anti-join at runtime."""
+    valid = (
+        headers.where("has_chem")
+        .drop("has_chem")
+        .withColumn(
+            "mat_key", F.concat_ws("\x1f", norm_name(F.col("display_name")), F.col("manufacturer_name"))
+        )
     )
     if existing_material_keys is not None:
-        # The accumulated key set grows monotonically under streaming
-        # re-ingest (every batch adds materials), so an UNCONDITIONAL
-        # broadcast would eventually hit the driver/broadcast ceiling and
-        # fail every later batch. Probe the size once (the graph.py /
-        # mentions.py adaptive-cutoff convention) and fall back to a plain
-        # shuffled anti-join — AQE still broadcasts it while it is small.
-        keys = existing_material_keys.select("mat_key")
-        if keys.count() <= EXISTING_KEYS_BROADCAST_MAX:
-            keys = F.broadcast(keys)
-        valid = valid.join(keys, "mat_key", "left_anti")
+        valid = valid.join(existing_material_keys.select("mat_key"), "mat_key", "left_anti")
     w = Window.partitionBy("mat_key").orderBy("doc_id")
     return valid.withColumn("rn", F.row_number().over(w)).where("rn = 1").drop("rn")
 
@@ -207,7 +203,8 @@ def materials_table(winners: DataFrame) -> DataFrame:
 
 def observations(winners: DataFrame, chems: DataFrame) -> DataFrame:
     """Chemical observations of winner docs, with material/manufacturer ids
-    attached — the input to linking (s4/s5)."""
+    attached — the input to linking (s4/s5). Every winner doc has a header,
+    so the inner join also drops chemicals of header-less docs."""
     return chems.join(
         winners.select(
             "doc_id",

@@ -2,9 +2,10 @@
 primitive (stage s5). GraphFrames-style iterative DataFrame joins, no RDDs.
 
 Two physical strategies behind one signature:
-  * driver union-find — exact, one collect, for vocabulary graphs under
-    SMALL_GRAPH_EDGES (the common case: the DISTINCT name<->CAS graph is
-    orders of magnitude smaller than the observation table);
+  * driver union-find — exact, one bounded collect that is also the size
+    probe, for vocabulary graphs under SMALL_GRAPH_EDGES (the common case:
+    the DISTINCT name<->CAS graph is orders of magnitude smaller than the
+    observation table);
   * alternating large-star/small-star (Kiveris et al., "Connected
     Components in MapReduce and Beyond", 2014) — O(log^2 n) rounds
     regardless of diameter, for graphs too large to collect.
@@ -68,30 +69,29 @@ def connected_components(
 
     algorithm:
       'auto' — union-find when the distinct graph fits on the driver,
-               otherwise large/small-star.
+               otherwise large/small-star. The size check IS the driver
+               collect (bounded at SMALL_GRAPH_EDGES + 1 rows), so a small
+               graph costs one distributed pass and an oversize graph pays
+               one discarded bounded collect before the star loop.
       'star' — force the distributed large-star/small-star loop.
     """
     if algorithm not in ("auto", "star"):
         raise ValueError(
             f"connected_components: algorithm must be 'auto' or 'star', got {algorithm!r}"
         )
-    und = _symmetrized(_clean_edges(edges, src, dst))
-
-    # Materialize the distinct vocabulary graph once (both paths reuse it),
-    # then size-probe with a limit+count — the probe moves NO rows to the
-    # driver, so a graph that overflows the union-find cutoff costs two
-    # cheap jobs instead of a multi-hundred-MB discarded collect. Only
-    # graphs that pass the probe pay the driver transfer.
-    und = und.localCheckpoint(eager=True)
+    e = _clean_edges(edges, src, dst)
     spark = edges.sparkSession
+    if algorithm == "auto":
+        # union-find needs no symmetrized view, only the distinct edges
+        edge_rows = e.distinct().limit(SMALL_GRAPH_EDGES + 1).collect()
+        if len(edge_rows) <= SMALL_GRAPH_EDGES:
+            return _union_find_labels(spark, edge_rows)
+    # the star loop derives its vertex and edge sets from the undirected
+    # graph: materialize it once
+    return _star_labels(spark, _symmetrized(e).localCheckpoint(eager=True), max_iter)
 
-    if algorithm == "auto" and und.limit(SMALL_GRAPH_EDGES + 1).count() <= SMALL_GRAPH_EDGES:
-        return _union_find_labels(spark, und)
-    return _star_labels(spark, und, max_iter)
 
-
-def _union_find_labels(spark: SparkSession, und: DataFrame) -> DataFrame:
-    probe = und.collect()
+def _union_find_labels(spark: SparkSession, edge_rows: list) -> DataFrame:
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -103,7 +103,7 @@ def _union_find_labels(spark: SparkSession, und: DataFrame) -> DataFrame:
         return root
 
     vertices: set[str] = set()
-    for row in probe:
+    for row in edge_rows:
         a, b = row["src"], row["dst"]
         vertices.add(a)
         vertices.add(b)
@@ -113,8 +113,6 @@ def _union_find_labels(spark: SparkSession, und: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     rows = sorted((v, find(v)) for v in vertices)
-    if not rows:
-        return spark.createDataFrame([], "vertex string, component string")
     return spark.createDataFrame(rows, "vertex string, component string")
 
 

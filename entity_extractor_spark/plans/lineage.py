@@ -23,7 +23,7 @@ import shutil
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -32,8 +32,9 @@ class LineageLog:
         self.out_dir = out_dir
         self.path = os.path.join(out_dir, "_lineage.json")
         os.makedirs(out_dir, exist_ok=True)
-        # stages commit from concurrent DAG-executor threads; read-modify-
-        # write of the lineage file must be atomic per commit
+        # stages commit from concurrent DAG-executor threads: every access
+        # to the lineage file (each read-modify-write, and each read) holds
+        # this lock, so no commit or invalidation is lost
         self._lock = threading.Lock()
 
     def _read(self) -> dict:
@@ -42,9 +43,20 @@ class LineageLog:
         with open(self.path) as f:
             return json.load(f)
 
+    def _write(self, rec: dict) -> None:
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(rec, f, indent=1)
+        os.replace(tmp, self.path)
+
+    def stage_record(self, stage: str) -> dict:
+        """The stage's lineage record ({} when it has none)."""
+        with self._lock:
+            return self._read()["stages"].get(stage, {})
+
     def is_done(self, stage: str) -> bool:
-        rec = self._read()["stages"].get(stage)
-        return bool(rec) and rec["status"] == "done" and os.path.exists(self._stage_dir(stage))
+        rec = self.stage_record(stage)
+        return rec.get("status") == "done" and os.path.exists(self._stage_dir(stage))
 
     def _stage_dir(self, stage: str) -> str:
         return os.path.join(self.out_dir, stage)
@@ -65,29 +77,24 @@ class LineageLog:
                 "partitions": partitions or [],
                 "schema": schema_json,
             }
-            tmp = self.path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(rec, f, indent=1)
-            os.replace(tmp, self.path)
+            self._write(rec)
 
     def invalidate_from(self, stage: str, order: list[str]) -> None:
         """force-rerun semantics (reference 'force' flag,
         file_analysis_service.py:244-253): drop this stage and everything
         after it."""
-        rec = self._read()
-        if stage in order:
-            for s in order[order.index(stage):]:
-                rec["stages"].pop(s, None)
-                d = self._stage_dir(s)
-                if os.path.exists(d):
-                    shutil.rmtree(d)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rec, f, indent=1)
-        os.replace(tmp, self.path)
+        with self._lock:
+            rec = self._read()
+            if stage in order:
+                for s in order[order.index(stage):]:
+                    rec["stages"].pop(s, None)
+                    d = self._stage_dir(s)
+                    if os.path.exists(d):
+                        shutil.rmtree(d)
+            self._write(rec)
 
     def stage_counters(self, stage: str) -> dict:
-        return self._read()["stages"].get(stage, {}).get("counters", {})
+        return self.stage_record(stage).get("counters", {})
 
 
 def commit_stage(
@@ -105,6 +112,12 @@ def commit_stage(
     tmp = final + "._tmp"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
+    # Named counters are observed on the write itself (one set of sums
+    # carried by the write job), not re-aggregated from the committed table.
+    observed = None
+    if counters_cols:
+        observed = Observation()
+        df = df.observe(observed, *[F.sum(col).alias(name) for name, col in counters_cols.items()])
     df.write.mode("overwrite").parquet(tmp)
     t_write = time.time()
     if os.path.exists(final):
@@ -130,13 +143,9 @@ def commit_stage(
         "wall_sec": round(time.time() - t0, 3),
         "write_sec": round(t_write - t0, 3),
     }
-    if counters_cols:
-        # all requested counters in ONE agg job, not one job per column
-        row = committed.agg(
-            *[F.sum(col).alias(name) for name, col in counters_cols.items()]
-        ).collect()[0]
-        for name in counters_cols:
-            counters[name] = int(row[name] or 0)
+    if observed is not None:
+        for name, value in observed.get.items():
+            counters[name] = int(value or 0)
     log.mark_done(stage, counters=counters, partitions=parts, schema_json=df.schema.json())
     return committed
 
@@ -144,7 +153,7 @@ def commit_stage(
 def load_stage(log: LineageLog, spark: SparkSession, stage: str) -> DataFrame:
     """Read a committed stage table back with its lineage-recorded schema
     (an empty commit still reproduces the exact StructType)."""
-    schema_json = log._read()["stages"].get(stage, {}).get("schema")
+    schema_json = log.stage_record(stage).get("schema")
     if schema_json:
         from pyspark.sql.types import StructType
 

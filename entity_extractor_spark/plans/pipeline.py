@@ -21,8 +21,7 @@ commit/barrier tail overlaps another stage's compute. On a large cluster
 this keeps executors busy across stage boundaries; the per-stage lineage
 contract is unchanged (each stage still commits atomically). The graph is
 declared once, in STAGES: each entry names its builder, data and
-scheduling dependencies, lineage counters and whether it reads the parsed
-stream.
+scheduling dependencies and lineage counters.
 """
 
 from __future__ import annotations
@@ -33,6 +32,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegralType, StringType, StructType
 
 from ..operators import extract as X
 from ..operators import link as L
@@ -50,15 +50,13 @@ class Stage:
     builder cannot read a stage it does not declare. `after` adds
     scheduling-only edges (nothing flows along them; resume and lineage
     ignore them). `counters` maps named lineage counters to summed output
-    columns. `reads_parsed` marks the stages that traverse the persisted
-    parsed stream, which is materialized once before any of them runs."""
+    columns."""
 
     name: str
     build: Callable[..., DataFrame]
     deps: tuple[str, ...] = ()
     after: tuple[str, ...] = ()
     counters: dict[str, str] | None = None
-    reads_parsed: bool = False
 
     @property
     def sched_deps(self) -> tuple[str, ...]:
@@ -87,7 +85,7 @@ def _mentions(run: _Run) -> DataFrame:
 
 
 def _winners(run: _Run) -> DataFrame:
-    return X.winner_docs(run.headers, run.chems.select("doc_id").distinct(), run.existing_keys)
+    return X.winner_docs(run.headers, run.existing_keys)
 
 
 def _observations(run: _Run, winners: DataFrame) -> DataFrame:
@@ -176,9 +174,9 @@ def _triples(
 # queuing their tasks behind the unrelated mention scan. `mentions` has no
 # downstream consumer inside the DAG, so it yields until `clustered`
 # commits: the winners->observations->clustered chain (including the
-# connected-components probe jobs inside the `clustered` builder, which are
-# short multi-job sequences especially hurt by FIFO queuing behind a
-# corpus-wide scan) runs uncontended, and the scan then overlaps the small
+# connected-components driver collect inside the `clustered` builder, a
+# short job sequence especially hurt by FIFO queuing behind a corpus-wide
+# scan) runs uncontended, and the scan then overlaps the small
 # post-cluster tail (edges/chem_nodes/nodes/triples), which leaves most of
 # the cluster idle.
 #
@@ -186,8 +184,8 @@ def _triples(
 # of lattice-fold drops.
 STAGES: tuple[Stage, ...] = (
     Stage("mentions", _mentions, after=("clustered",)),
-    Stage("winners", _winners, reads_parsed=True),
-    Stage("observations", _observations, ("winners",), reads_parsed=True),
+    Stage("winners", _winners),
+    Stage("observations", _observations, ("winners",)),
     Stage("materials", _materials, ("winners",)),
     Stage("manufacturers", _manufacturers, ("winners",)),
     Stage("clustered", _clustered, ("observations",)),
@@ -198,6 +196,24 @@ STAGES: tuple[Stage, ...] = (
 )
 
 STAGE_ORDER = [s.name for s in STAGES]
+
+
+def _check_documents_schema(schema: StructType) -> None:
+    """Driver-side input contract: `doc_id` string and `spans` an array of
+    structs with string `kind`/`text` and integral `offset`. Raises
+    ValueError naming the first violation (extra fields are allowed)."""
+    fields = {f.name: f.dataType for f in schema.fields}
+    if not isinstance(fields.get("doc_id"), StringType):
+        raise ValueError(f"run_pipeline: documents.doc_id must be string, got {fields.get('doc_id')}")
+    spans = fields.get("spans")
+    if not (isinstance(spans, ArrayType) and isinstance(spans.elementType, StructType)):
+        raise ValueError(f"run_pipeline: documents.spans must be array<struct>, got {spans}")
+    span = {f.name: f.dataType for f in spans.elementType.fields}
+    for name, want in (("kind", StringType), ("text", StringType), ("offset", IntegralType)):
+        if not isinstance(span.get(name), want):
+            raise ValueError(
+                f"run_pipeline: documents.spans[].{name} must be {want.typeName()}, got {span.get(name)}"
+            )
 
 
 def run_pipeline(
@@ -211,6 +227,7 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Run (or resume) the stage graph over `documents` into `out_dir` and
     return every active stage's committed table by stage name."""
+    _check_documents_schema(documents.schema)
     log = LineageLog(out_dir)
     if not resume:
         log.invalidate_from(STAGE_ORDER[0], STAGE_ORDER)
@@ -236,21 +253,25 @@ def run_pipeline(
     # Partition on the COLUMN (hash partitioning on doc_id), not on
     # F.hash(doc_id): HashPartitioning(doc_id) satisfies the clustering
     # required by every downstream agg/join keyed on doc_id or any
-    # superset key, so the header min-agg (doc_id), the A5 dedupe agg
-    # (doc_id, chemical_name), the header semi-join and the observations
-    # join all reuse this ONE narrow exchange instead of re-shuffling.
+    # superset key, so the per-doc header agg (doc_id), the A5 dedupe agg
+    # (doc_id, chemical_name) and the observations join all reuse this ONE
+    # narrow exchange instead of re-shuffling.
+    #
+    # A null doc_id fails the parse scan itself (no extra job): every
+    # per-doc fold keys on it, and a null key would silently merge docs.
     parsed = (
-        X.parse_spans(X.text_spans(documents))
+        X.parse_spans(X.text_spans(documents.withColumn(
+            "doc_id",
+            F.coalesce("doc_id", F.raise_error(F.lit("run_pipeline: documents has a null doc_id"))),
+        )))
         .repartition(n_part, F.col("doc_id"))
         .persist()
     )
+    # Headers carry the per-doc has-a-chemical flag (one agg, one scan of
+    # the parsed cache for `winners`); the chemical dedupe is read only by
+    # `observations`, whose join to the winners also drops header-less docs.
     headers = X.resolve_headers(parsed)
-    # chems feeds BOTH the winner filter (doc ids with >=1 chemical) and
-    # the observations stage; both re-derive it from the parsed cache with
-    # cheap partition-local aggs (no raw-corpus rescan, no extra exchange).
-    chems = X.dedupe_chemicals(parsed).join(
-        headers.select("doc_id"), "doc_id", "left_semi"
-    )
+    chems = X.dedupe_chemicals(parsed)
     existing_keys = None
     if existing_nodes is not None and "manufacturer_name" in existing_nodes.columns:
         # re-ingest MERGE: prior materials make their identity keys occupied.
@@ -293,15 +314,11 @@ def run_pipeline(
             depth[s.name] = 1 + max((_depth(d) for d in below), default=0)
         return depth[s.name]
 
-    # Materialize the parsed cache once, fully parallel, before any stage
-    # runs: two concurrent first jobs would otherwise race to compute the
-    # same cached partitions (block-lock waits + duplicated shuffle reads).
-    # Only the stages declared `reads_parsed` gate this — winners and
-    # observations (via the headers/chems chains); `mentions` scans the raw
-    # corpus directly and shares no cache. A partial resume where only
-    # post-extract stages remain (clustered/edges/nodes/triples read
-    # committed stage parquet) must not re-parse 100 TB of input for
-    # nothing.
+    # The parsed cache needs no eager count before the DAG starts: its only
+    # readers, winners then observations, are ordered by their data edge and
+    # scan it once each, so no two first readers race to compute the same
+    # cached partitions; a resume with both done never computes it.
+    #
     # Fold replay order contract: every first-wins / last-wins fold orders
     # by doc_id in the column's NATIVE order — numeric for numeric ids,
     # plain string order for string ids ('doc-10' < 'doc-9'). That order is
@@ -309,8 +326,6 @@ def run_pipeline(
     # oracles replay the same comparison), which is the property the
     # contract needs; corpora that want numeric replay order for string
     # ids must zero-pad ('doc-%08d' — the corpus convention).
-    if not (resume and all(log.is_done(s.name) for s in active if s.reads_parsed)):
-        parsed.count()
 
     done: set[str] = set()
     submitted: set[str] = set()

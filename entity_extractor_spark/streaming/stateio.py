@@ -18,7 +18,6 @@ import os as _os
 import re as _re
 from typing import Callable, Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,14 +34,15 @@ _MANIFEST_RE = _re.compile(r"_compaction_(\d+)\.json")
 
 
 def read_glob(spark: SparkSession, schema, pattern: str) -> DataFrame | None:
-    """Glob read that returns None when no matching dir/file exists yet
-    (instead of raising PATH_NOT_FOUND)."""
-    try:
-        df = spark.read.schema(schema).parquet(pattern)
-        df.schema  # force path resolution so a missing glob raises here
-        return df
-    except AnalysisException:
+    """Parquet read of every path matching the Hadoop glob `pattern`, or
+    None when nothing matches yet. The glob is expanded on the driver
+    (FileSystem.globStatus, no Spark job) and the reader gets the explicit
+    paths, so a missing dir is a None, not a caught PATH_NOT_FOUND."""
+    fs, _, p = _fs(spark, pattern)
+    matches = fs.globStatus(p)  # None for a missing literal path
+    if not matches:
         return None
+    return spark.read.schema(schema).parquet(*[st.getPath().toString() for st in matches])
 
 
 # ----------------------------------------------------------- batch layout --

@@ -1,33 +1,29 @@
-
-
-def test_winner_docs_key_exclusion_same_on_both_join_paths(spark, monkeypatch):
-    """The size-gated broadcast fallback (unbounded streaming key
-    accumulators must not be force-broadcast forever) returns the same
-    winners as the broadcast path."""
+def test_winner_docs_key_exclusion_and_chemical_flag(spark):
+    """Existing material keys (MERGE) make every doc with that key lose, a
+    doc without a chemical line never competes, and the lowest doc_id wins
+    each remaining key."""
     from entity_extractor_spark.operators import extract as X
 
     headers = spark.createDataFrame(
         [
-            ("doc-00000001", "Acme Glue", "Acme", "c", "us"),
-            ("doc-00000002", "Acme Glue", "Acme", "c", "us"),
-            ("doc-00000003", "Other Thing", "Beta", "c", "us"),
+            ("doc-00000001", "Acme Glue", "Acme", "c", "us", True),
+            ("doc-00000002", "Acme Glue", "Acme", "c", "us", True),
+            ("doc-00000003", "Other Thing", "Beta", "c", "us", True),
+            ("doc-00000004", "Other Thing", "Beta", "c", "us", True),
+            ("doc-00000000", "Other Thing", "Beta", "c", "us", False),
+            ("doc-00000005", "No Chem", "Gamma", "c", "us", False),
         ],
         "doc_id string, display_name string, manufacturer_name string,"
-        " manufacturer_city string, manufacturer_country string",
+        " manufacturer_city string, manufacturer_country string, has_chem boolean",
     )
-    chems = spark.createDataFrame(
-        [("doc-00000001",), ("doc-00000002",), ("doc-00000003",)],
-        "doc_id string",
-    )
-    existing = spark.createDataFrame(
-        [("acmeglue\x1fAcme",)], "mat_key string"
-    )
-    broadcast_path = X.winner_docs(headers, chems, existing).collect()
-    monkeypatch.setattr(X, "EXISTING_KEYS_BROADCAST_MAX", 0)
-    shuffle_path = X.winner_docs(headers, chems, existing).collect()
-    want = {("doc-00000003", "Other Thing")}
-    for got in (broadcast_path, shuffle_path):
-        assert {(r["doc_id"], r["display_name"]) for r in got} == want
+    existing = spark.createDataFrame([("acmeglue\x1fAcme",)], "mat_key string")
+    got = X.winner_docs(headers, existing)
+    assert "has_chem" not in got.columns
+    assert {(r["doc_id"], r["display_name"]) for r in got.collect()} == {
+        ("doc-00000003", "Other Thing")
+    }
+    fresh = {r["doc_id"] for r in X.winner_docs(headers).collect()}
+    assert fresh == {"doc-00000001", "doc-00000003"}
 
 
 def test_parse_spans_adversarial_layouts_match_sequential_replay(spark):
@@ -101,6 +97,10 @@ def test_parse_spans_adversarial_layouts_match_sequential_replay(spark):
 
     got_h = {r["doc_id"]: r["material_name"] for r in headers.collect()}
     assert got_h == want_headers  # doc-a: Glue One; doc-c absent
+    # the same per-doc agg flags docs with >= 1 chemical line
+    assert {r["doc_id"]: r["has_chem"] for r in headers.collect()} == {
+        "doc-a": True, "doc-b": True, "doc-d": False,
+    }
     got_c = {
         (r["doc_id"], r["chemical_name"]): (r["seq"], r["cas_number"], r["weight_percent"], r["tag"], r["source"])
         for r in chems.collect()

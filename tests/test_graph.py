@@ -57,6 +57,18 @@ def test_distributed_path_matches_small_path(spark, monkeypatch):
     assert small == dist
 
 
+def test_small_path_runs_at_most_three_jobs(spark):
+    """The union-find path is one bounded distinct-edge collect (a shuffle
+    stage plus the collect), with no checkpoint or separate size probe."""
+    edges = _random_edges(4, 60, 90)
+    df = spark.createDataFrame(edges, "src string, dst string")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.numTotalJobs()
+    labels = G.connected_components(df)
+    assert sched.numTotalJobs() - j0 <= 3
+    assert {r["vertex"]: r["component"] for r in labels.collect()} == _brute_components(edges)
+
+
 def test_empty_edges(spark):
     df = spark.createDataFrame([], "src string, dst string")
     assert G.connected_components(df).count() == 0

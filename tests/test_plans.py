@@ -77,10 +77,9 @@ def test_extract_path_has_no_python_udf(spark):
 
     docs = generate_documents_df(spark, CorpusConfig(n_docs=10)).repartition(2, F.hash("doc_id"))
     parsed = X.parse_spans(X.text_spans(docs))
-    headers = X.resolve_headers(parsed)
-    chems = X.dedupe_chemicals(parsed).join(headers.select("doc_id"), "doc_id", "left_semi")
-    winners = X.winner_docs(headers, chems.select("doc_id").distinct())
-    plan = winners._jdf.queryExecution().executedPlan().toString()
+    winners = X.winner_docs(X.resolve_headers(parsed))
+    obs = X.observations(winners, X.dedupe_chemicals(parsed))
+    plan = obs._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
@@ -179,40 +178,42 @@ def test_doc_window_reuses_corpus_partitioning(spark):
 
 
 def test_extract_aggs_reuse_one_narrow_exchange_and_never_shuffle_raw_text(spark):
-    """The r05 scaling-gate property, pinned: ONE explicit hash(doc_id)
-    repartition of the NARROW parsed stream serves the header min-agg, the
-    A5 chem dedupe agg (doc_id, chemical_name — superset key) AND the
-    header semi-join with zero further Exchanges; parse_spans itself is a
-    pure map-side scan (no Exchange at all); and no exchange anywhere in
-    the extract path carries the raw `spans`/`text` span stream."""
+    """The r05 scaling-gate property, pinned on the pipeline's extract
+    shape: ONE explicit hash(doc_id) repartition of the NARROW parsed
+    stream serves the per-doc header agg (which also carries the
+    has-a-chemical flag) and the A5 chem dedupe agg (doc_id,
+    chemical_name — superset key) with zero further doc_id Exchanges;
+    `winners` traverses the parsed stream ONCE (no semi-join back to it);
+    parse_spans itself is a pure map-side scan (no Exchange at all); and no
+    exchange anywhere in the extract path carries the raw `spans`/`text`
+    span stream."""
     from pyspark.sql import functions as F
 
     from entity_extractor_spark.corpus import CorpusConfig, generate_documents_df
     from entity_extractor_spark.operators import extract as X
 
     docs = generate_documents_df(spark, CorpusConfig(n_docs=20))
+    plan_of = lambda df: df._jdf.queryExecution().executedPlan().toString()  # noqa: E731
     # the scan stage alone: classify+parse is exchange-free
-    scan_plan = (
-        X.parse_spans(X.text_spans(docs))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    scan_plan = plan_of(X.parse_spans(X.text_spans(docs)))
     assert "Exchange" not in scan_plan, scan_plan
 
-    # the pipeline's extract shape: repartition(parsed) -> headers + chems
+    # the pipeline's extract shape: repartition(parsed) -> winners, and
+    # observations = dedupe_chemicals(parsed) joined to winners
     parsed = X.parse_spans(X.text_spans(docs)).repartition(4, F.col("doc_id"))
-    headers = X.resolve_headers(parsed)
-    chems = X.dedupe_chemicals(parsed).join(
-        headers.select("doc_id"), "doc_id", "left_semi"
-    )
-    plan = chems._jdf.queryExecution().executedPlan().toString()
-    # parsed appears twice in this lineage (chems side + headers side), so
-    # the explicit repartition exchange materializes twice; no other SHUFFLE
-    # exchange exists — the two aggs reuse doc_id clustering, and the semi
-    # join either broadcasts the small header side (fine) or reuses the
-    # same clustering.
-    assert plan.count("Exchange hashpartitioning") == 2, plan
+    winners = X.winner_docs(X.resolve_headers(parsed))
+    chems = X.dedupe_chemicals(parsed)
+    w_plan, c_plan = plan_of(winners), plan_of(chems)
+    # winners: one traversal of parsed, no join; its only exchanges are the
+    # explicit doc_id repartition and the mat_key first-wins window
+    assert w_plan.count("Generate explode") == 1 and "Join" not in w_plan, w_plan
+    assert w_plan.count("Exchange hashpartitioning(doc_id") == 1, w_plan
+    assert w_plan.count("Exchange hashpartitioning") == 2, w_plan
+    # chems: the dedupe agg reuses the one repartition exchange
+    assert c_plan.count("Exchange") == 1, c_plan
     # no exchange row schema may contain the raw span stream: every
     # Exchange line of the plan must be the parsed shape, not spans/text
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "spans#" not in line and "text#" not in line, line
+    for plan in (w_plan, c_plan, plan_of(X.observations(winners, chems))):
+        for line in plan.splitlines():
+            if "Exchange" in line:
+                assert "spans#" not in line and "text#" not in line, line

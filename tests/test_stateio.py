@@ -181,3 +181,47 @@ def test_per_batch_table_read_anchors_on_table_dir(spark, tmp_path):
         ).parquet(os.path.join(root, f"batch_{b:06d}", "triples"))
     got = _rows(read_state(spark, SCHEMA, root, table="triples"))
     assert got == [(0, "t0", 0), (3, "t3", 3)]
+
+
+def test_read_glob_no_match_is_none_without_a_reader_call(spark, tmp_path, monkeypatch):
+    """A glob with no match (missing root, root without batch dirs, missing
+    literal path) returns None from the driver-side expansion alone: the
+    parquet reader is never handed a path that does not exist."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from entity_extractor_spark.streaming.stateio import read_glob
+
+    calls = []
+    plain = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader, "parquet", lambda self, *p, **kw: calls.append(p) or plain(self, *p, **kw)
+    )
+    (tmp_path / "empty_root").mkdir()
+    for pattern in (
+        str(tmp_path / "missing" / "batch_*"),
+        str(tmp_path / "empty_root" / "batch_*"),
+        str(tmp_path / "empty_root" / "compact_000001"),
+        str(tmp_path / "empty_root" / "batch_*" / "triples"),
+    ):
+        assert read_glob(spark, SCHEMA, pattern) is None, pattern
+    assert calls == []
+    assert read_state(spark, SCHEMA, str(tmp_path / "empty_root")) is None
+
+
+def test_read_glob_match_reads_the_expanded_paths(spark, tmp_path):
+    """With matches, read_glob reads exactly the matched dirs (not a
+    neighbouring non-matching one), launches no Spark job, and the
+    path-derived _batch ids are unchanged."""
+    from entity_extractor_spark.streaming.stateio import read_glob
+
+    acc = str(tmp_path / "acc")
+    _write_batches(spark, acc, 3)
+    spark.createDataFrame([(99, "stray")], SCHEMA).write.parquet(os.path.join(acc, "other"))
+    tracker = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = tracker.numTotalJobs()
+    df = read_glob(spark, SCHEMA, os.path.join(acc, "batch_*"))
+    assert tracker.numTotalJobs() == j0
+    assert sorted(r["k"] for r in df.collect()) == [b * 10 + i for b in range(3) for i in range(3)]
+    assert _rows(read_state(spark, SCHEMA, acc)) == [
+        (b * 10 + i, f"v{b}:{i}", b) for b in range(3) for i in range(3)
+    ]
