@@ -100,8 +100,8 @@ def w5_session_window(spark, sf_dir):
        GROUP BY time_bucket(INTERVAL '1 hour', ts), event_type""",
 )
 def w4_tumbling_window_agg(spark, sf_dir):
-    """Tumbling event-time window aggregation — the BATCH semantics of the
-    streaming windows.doc_arrival_counts operator, value-checked vs DuckDB
+    """Tumbling event-time window aggregation — the BATCH semantics of a
+    watermarked streaming window count, value-checked vs DuckDB
     time_bucket (the streaming watermark/append behavior is gated by
     tests/test_stream_windows.py; the window arithmetic itself is gated
     here). Algebraic aggs -> map-side partial aggregation."""

@@ -395,12 +395,3 @@ def gazetteer_rows(cfg: CorpusConfig) -> list[dict]:
             seen.add(k)
             out.append(r)
     return out
-
-
-def gazetteer_df(spark: SparkSession, cfg: CorpusConfig) -> DataFrame:
-    """gazetteer_rows as a pinned-schema DataFrame (S5 source)."""
-    from .schemas import GAZETTEER_SCHEMA
-
-    return spark.createDataFrame(
-        [(r["keyword"], r["mtype"]) for r in gazetteer_rows(cfg)], schema=GAZETTEER_SCHEMA
-    )

@@ -18,16 +18,6 @@ def norm_name(col: Column) -> Column:
     return F.regexp_replace(F.lower(col), " ", "")
 
 
-def nonblank(col: Column) -> Column:
-    """F1 guard — trim(x) != '' (global_node_repository.py:31)."""
-    return F.trim(col) != ""
-
-
-def confidence_pct(col: Column) -> Column:
-    """F3 — round(confidence*100, 2) (file_analysis_service.py:94)."""
-    return F.round(col * 100.0, 2)
-
-
 def flatten_polygon(col: Column) -> Column:
     """F4 — [[{x,y},...]] -> [x1,y1,x2,y2,...] (file_analysis_service.py:96-101)."""
     return F.flatten(F.transform(col, lambda p: F.array(p["x"], p["y"])))
@@ -97,60 +87,6 @@ def container_relative_path(url: Column, container: str) -> Column:
         rel,
         F.coalesce(F.concat(F.lit("?"), q), F.lit("")),
         F.coalesce(F.concat(F.lit("#"), frag), F.lit("")),
-    )
-
-
-def page_text_concat(spans: Column) -> Column:
-    """F10 — ' '.join of text spans in offset order
-    (file_analysis_service.py:556-564; order invariant W2)."""
-    ordered = F.array_sort(
-        F.filter(spans, lambda s: s["kind"] == F.lit("text")),
-        lambda a, b: F.when(a["offset"] < b["offset"], -1)
-        .when(a["offset"] > b["offset"], 1)
-        .otherwise(0),
-    )
-    return F.array_join(F.transform(ordered, lambda s: s["text"]), " ")
-
-
-def tag_to_status(tag: Column) -> Column:
-    """F11 — PFAS->YES, NO_PFAS->NO, else PENDING
-    (artifact_ingestor_service.py:881-887)."""
-    return (
-        F.when(tag == "PFAS", F.lit("YES"))
-        .when(tag == "NO_PFAS", F.lit("NO"))
-        .otherwise(F.lit("PENDING"))
-    )
-
-
-def zero_pad_page(col: Column) -> Column:
-    """F13 — '{:03}'.format(page_no) (file_analysis_service.py:604)."""
-    return F.lpad(col.cast("string"), 3, "0")
-
-
-def span_sequence_fingerprint(spans: Column) -> Column:
-    """W2 invariant — deterministic fingerprint of the ordered span sequence
-    (kind, text, media_ref, offset). Two rows have equal fingerprints iff
-    their span sequences are identical in content AND order. Used by every
-    stage's output check (BASELINE.json input_hint row invariant)."""
-    ordered = F.array_sort(
-        spans,
-        lambda a, b: F.when(a["offset"] < b["offset"], -1)
-        .when(a["offset"] > b["offset"], 1)
-        .otherwise(0),
-    )
-    return F.sha2(
-        F.to_json(
-            F.transform(
-                ordered,
-                lambda s: F.struct(
-                    s["kind"].alias("k"),
-                    s["text"].alias("t"),
-                    s["media_ref"].alias("m"),
-                    s["offset"].alias("o"),
-                ),
-            )
-        ),
-        256,
     )
 
 

@@ -503,8 +503,7 @@ def k_anonymity_report(
 
     Scale shape: ONE algebraic groupBy count over the quasi columns
     (map-side partials absorb hot combos) + one summary agg over group
-    rows — data rows are touched once. Pair with
-    k_anonymity_violations for the combos to suppress/generalize."""
+    rows — data rows are touched once."""
     if not quasi_cols:
         raise ValueError("k_anonymity_report: quasi_cols must be non-empty")
     if type(k) is not int or k < 2:
@@ -530,24 +529,6 @@ def k_anonymity_report(
             "risk_ppm"
         ),
         (F.col("min_group_size") >= k).alias("k_holds"),
-    )
-
-
-def k_anonymity_violations(
-    df: DataFrame, quasi_cols: list[str], k: int
-) -> DataFrame:
-    """The remediation side of k_anonymity_report: every
-    quasi-identifier combination with fewer than k records, plus its
-    size — the exact list to suppress or generalize. Same single
-    groupBy; output is bounded by violating combos, not data."""
-    if not quasi_cols:
-        raise ValueError("k_anonymity_violations: quasi_cols non-empty")
-    if type(k) is not int or k < 2:
-        raise ValueError("k_anonymity_violations: k must be an int >= 2")
-    return (
-        df.groupBy(*quasi_cols)
-        .agg(F.count(F.lit(1)).cast("long").alias("group_size"))
-        .where(F.col("group_size") < k)
     )
 
 

@@ -127,20 +127,6 @@ def bloom_probe(
     return out.select(*orig, flag.alias(flag_col))
 
 
-def bloom_semi_join(
-    df: DataFrame,
-    key_col: str,
-    bloom: DataFrame,
-    m_bits: int,
-    k_hashes: int = 3,
-) -> DataFrame:
-    """The pruning form: keep only rows that might join — a SUPERSET of
-    the true semi join (no false negatives), shrunk by ~(1 - fp_rate)
-    of the non-matching mass before any expensive downstream join."""
-    flagged = bloom_probe(df, key_col, bloom, m_bits, k_hashes, "_bm")
-    return flagged.where(F.col("_bm")).drop("_bm")
-
-
 def bloom_stats(
     bloom: DataFrame, m_bits: int, k_hashes: int = 3
 ) -> DataFrame:

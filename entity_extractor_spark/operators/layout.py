@@ -1,8 +1,8 @@
-"""Physical data-layout operators: Z-order (Morton) multi-dimensional
-clustering and the file-level pruning report that proves it worked.
+"""Physical data-layout operators: the Z-order (Morton) clustering key,
+table-maintenance planners and the zone maps that measure pruning.
 
 At 100 TB the scan you DON'T do is the fastest operator in the engine.
-Partition pruning (write_partitioned, plans/tableio.py) handles one
+Partition pruning (plans/tableio.py) handles one
 coarse dimension; Z-order handles the next two finer ones: interleave
 the bits of two bucketized sort keys and range-partition files by the
 interleaved value, and every file's (min, max) footer covers a roughly
@@ -16,7 +16,7 @@ the key is reproducible on any engine and stable across partitionings.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,7 +42,7 @@ def zorder_values(
     on the curve — filter or impute upstream); ranges wide enough to
     overflow the product raise with the fix (lower `bits`) instead of
     wrapping. Narrow codegen'd projection, zero shuffle — the shuffle
-    belongs to write_zordered's range partitioner.
+    belongs to the writer's range partition on zvalue.
     """
     if not (1 <= bits <= 20):
         raise ValueError("bits must be in [1, 20]")
@@ -80,49 +80,6 @@ def zorder_values(
         .withColumn("zvalue", F.expr(_interleave_expr(bits)))
         .withColumnRenamed("_zx", "zx")
         .withColumnRenamed("_zy", "zy")
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    bits: int = 16,
-    num_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Cluster `df` into `num_files` parquet files by Z-value range —
-    after this, every file's parquet footer (min, max) stats cover a
-    compact rectangle of the (x, y) plane and a reader filtering on
-    EITHER column row-group-skips most files. repartitionByRange samples
-    the z distribution, so files are balanced even when the plane is not
-    uniformly populated (the classic time×tenant hotspot)."""
-    z = zorder_values(df, x_col, y_col, bits=bits)
-    z.repartitionByRange(num_files, "zvalue").drop("zx", "zy", "zvalue").write.mode(
-        mode
-    ).parquet(path)
-
-
-def layout_report(
-    spark: SparkSession, path: str, x_col: str, y_col: str
-) -> DataFrame:
-    """Per-file bounding boxes of a written dataset: (file, rows, min/max
-    of both layout columns, spans) — the evidence that a clustering
-    actually tightened pruning (compare avg spans before/after). One
-    file-grouped algebraic agg over a two-column pruned scan."""
-    d = spark.read.parquet(path)
-    return (
-        d.groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.min(x_col).alias("x_min"),
-            F.max(x_col).alias("x_max"),
-            F.min(y_col).alias("y_min"),
-            F.max(y_col).alias("y_max"),
-        )
-        .withColumn("x_span", F.col("x_max") - F.col("x_min"))
-        .withColumn("y_span", F.col("y_max") - F.col("y_min"))
     )
 
 
@@ -265,9 +222,7 @@ def zone_map(df: DataFrame, file_col: str, value_col: str) -> DataFrame:
     """Per-file zone map over one column: (file_id, n_rows, n_nulls,
     vmin, vmax) — exactly what a parquet footer / Iceberg manifest entry
     stores, materialized as a TABLE so pruning can be *estimated and
-    audited* without touching the data again (layout_report gives the
-    two-column bbox flavor for Z-order; this is the single-column
-    planner-facing flavor). min/max ignore NULLs (parquet stats
+    audited* without touching the data again. min/max ignore NULLs (parquet stats
     semantics): an all-null file reports vmin = vmax = NULL with its
     null count. ONE algebraic file-grouped agg — data touched once; the
     output is file-count-sized, i.e. metadata-sized."""
@@ -294,8 +249,8 @@ def zone_map_prune(zm: DataFrame, lo: int, hi: int) -> DataFrame:
     inflate the bound; boundary files carry the remaining gap between
     bound and truth).
 
-    This is the measurement half of the layout family: write_partitioned
-    / write_zordered claim better pruning — sum(rows_scan_upper) over
+    This is the measurement half of the layout family: a re-layout
+    (partitioning, Z-order) claims better pruning — sum(rows_scan_upper) over
     this table, before vs after re-layout, is the number that proves it
     (the same arithmetic Delta/Iceberg `files_scanned` metrics report).
     Pure metadata arithmetic over file-count-sized input: zero data

@@ -19,10 +19,10 @@ That reduction lets the scan run entirely JVM-side: explode spans -> words
 with built-in array functions, then a broadcast join against the tiny
 gazetteer dimension (S5, keywords_service.py:35-47) on a `contains`
 predicate — whole-stage codegen, no Python, no Arrow transfer. Cost is
-O(words x keywords) vectorized character scans; for gazetteers large
-enough that the product matters, swap the broadcast join for an
-Aho-Corasick pass in mapInPandas (SURVEY.md §7 risk (c)) — the surrounding
-plumbing is unchanged.
+O(distinct words x keywords) vectorized character scans; gazetteers large
+enough that the product matters, and matched vocabularies too large to
+collect, go to an Aho-Corasick pass in mapInPandas instead (SURVEY.md §7
+risk (c)) — same rows, same plumbing around it.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 PREFILTER_VOCAB_MAX = 512
 
 # Matched-vocabulary collect cap (driver-memory guard): past this, the scan
-# falls back to the lazy stream-side broadcast join (no driver collect).
+# falls back to the Aho-Corasick pass (no driver collect).
 MATCHED_VOCAB_MAX = 200_000
 
 # Gazetteer size past which the O(distinct-words x keywords) substring
@@ -166,13 +166,12 @@ def detect_mentions(documents: DataFrame, keywords: list[dict]) -> DataFrame:
          match; survivors explode and broadcast-hash-join the matched
          pairs. O(words_of_matching_spans) hash lookups, zero substring
          scans on the stream.
-    Adaptive cutoffs (mirrors the connected-components pattern, graph.py):
+    Every other input goes to detect_mentions_ac (linear automaton pass,
+    no collect, same output), so there are two physical paths:
       * len(keywords) >= AC_KEYWORDS_MIN — the theta-join over the word
-        vocabulary is the bottleneck; dispatch to detect_mentions_ac
-        (linear automaton pass, no collect);
+        vocabulary is the bottleneck;
       * matched vocabulary > MATCHED_VOCAB_MAX — the pair collect would
-        blow the driver; fall back to the lazy stream-side broadcast join
-        (same output, no collect, no prefilter)."""
+        blow the driver."""
     if len(keywords) >= AC_KEYWORDS_MIN:
         return detect_mentions_ac(documents, keywords)
     spark = documents.sparkSession
@@ -203,16 +202,8 @@ def detect_mentions(documents: DataFrame, keywords: list[dict]) -> DataFrame:
     ).limit(MATCHED_VOCAB_MAX + 1).collect()
     if len(matched_rows) > MATCHED_VOCAB_MAX:
         # short/common-substring keywords matched a huge vocabulary slice:
-        # skip the driver materialization entirely and join on the stream
-        return (
-            words_of(spans)
-            .join(kw, F.col("word_lower").contains(F.col("kw_lower")))
-            .select(
-                "doc_id", "span_offset", "keyword", "word",
-                F.round(F.lit(1.0) * 100, 2).alias("confidence"),  # F3
-                "mtype", "word_idx",
-            )
-        )
+        # skip the driver materialization and scan with the automaton
+        return detect_mentions_ac(documents, keywords)
     if not matched_rows:
         return spark.createDataFrame([], _MENTIONS_SCHEMA)
     matched = F.broadcast(
@@ -243,24 +234,4 @@ def detect_mentions(documents: DataFrame, keywords: list[dict]) -> DataFrame:
             "mtype",
             "word_idx",
         )
-    )
-
-
-def mention_counts(mentions: DataFrame) -> DataFrame:
-    """A1 — per-(doc, span) total + distinct-keyword counts
-    (file_analysis_service.py:75-121)."""
-    return mentions.groupBy("doc_id", "span_offset").agg(
-        F.count("*").alias("matched_keywords_count"),
-        F.countDistinct("keyword").alias("unique_matched_keywords_count"),
-    )
-
-
-def doc_rollup(page_counts: DataFrame) -> DataFrame:
-    """A2 — file-level rollup: total matches + ordered per-span breakdown
-    (file_analysis_service.py:775-789)."""
-    return page_counts.groupBy("doc_id").agg(
-        F.sum("matched_keywords_count").alias("words_count_matched"),
-        F.array_sort(
-            F.collect_list(F.struct("span_offset", "matched_keywords_count"))
-        ).alias("pagewise"),
     )

@@ -86,19 +86,6 @@ def extract_media_metadata(binary_df: DataFrame) -> DataFrame:
     return binary_df.mapInPandas(run, schema=MEDIA_META_SCHEMA)
 
 
-def frame_sample_plan(binary_df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: emits (doc_id, frame_idx) rows for a stub
-    frame count derived from payload size — demonstrates fan-out shape
-    (explode) without codecs."""
-    n_frames = (F.length(F.col("payload")) / 100).cast("int") + 1
-    return binary_df.select(
-        "doc_id",
-        F.explode(
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )
-
-
 def media_context(docs: DataFrame) -> DataFrame:
     """Figure-caption candidate association over interleaved spans — the
     grounding step a multimodal KG needs before an image can evidence a

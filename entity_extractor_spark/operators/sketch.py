@@ -564,19 +564,6 @@ def hll_estimate(
     )
 
 
-def hll_merge(a: DataFrame, b: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Union two register tables into one — per-(group, bucket) MAX, the
-    whole point of HLL: yesterday's persisted registers absorb today's
-    without touching yesterday's data. Purely algebraic; commutative,
-    associative, idempotent (re-merging the same shard changes
-    nothing)."""
-    return (
-        a.unionByName(b)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("register").cast("long").alias("register"))
-    )
-
-
 def hll_sliding(registers: DataFrame, idx_col: str, k: int) -> DataFrame:
     """Trailing-k-bucket merged register table, one window per OBSERVED
     bucket index: window w = buckets [w-k+1, w] (partial at the head —

@@ -38,13 +38,6 @@ DOCUMENTS_SCHEMA = StructType(
     ]
 )
 
-GAZETTEER_SCHEMA = StructType(
-    [
-        StructField("keyword", StringType(), False),
-        StructField("mtype", StringType(), False),  # chemical|material|manufacturer
-    ]
-)
-
 MENTIONS_SCHEMA = StructType(
     [
         StructField("doc_id", StringType(), False),

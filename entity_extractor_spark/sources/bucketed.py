@@ -60,23 +60,3 @@ def bucketed_join(
     bucket-sorted): the join cost is the scan, which is the floor."""
     keys = [key] if isinstance(key, str) else list(key)
     return spark.table(left_table).join(spark.table(right_table), keys, how)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_col: str | list[str],
-) -> None:
-    """Hive-layout partitioned parquet write (path/part_col=value/...).
-
-    The complement of bucketing: bucketing pre-shuffles for JOIN keys,
-    directory partitioning prunes SCANS — a reader filtering on the
-    partition column never opens the other directories (the plan shows the
-    predicate under PartitionFilters and the scan's file count drops;
-    gated by tests/test_bucketed_skew.py). At 100 TB this is the
-    difference between scanning one day and scanning three years; the
-    parquet-native analog of an Iceberg identity/days() partition
-    transform. Partition columns must be low-cardinality (each value is a
-    directory of >= 1 file): date buckets, language, source — never doc_id."""
-    cols = [partition_col] if isinstance(partition_col, str) else list(partition_col)
-    df.write.mode("overwrite").partitionBy(*cols).parquet(path)

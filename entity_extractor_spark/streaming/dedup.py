@@ -34,8 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedupe as D
-from ..schemas import DOCUMENTS_SCHEMA
-from .stateio import batch_dir, compact_batches, read_state, run_stream
+from .stateio import batch_dir, read_state
 
 IDX_SCHEMA = "doc_id bigint, band int, bucket string"
 DEC_SCHEMA = "doc_id bigint, keeper bigint, is_dup boolean"
@@ -125,60 +124,3 @@ def read_decisions(spark: SparkSession, out_dir: str) -> DataFrame | None:
     far (batch column stripped), or None before the first batch."""
     df = read_state(spark, DEC_SCHEMA, _dec_dir(out_dir))
     return None if df is None else df.drop("_batch")
-
-
-def compact_state(spark: SparkSession, out_dir: str) -> None:
-    """Compact both accumulators (index + decisions) into one dir each —
-    run between batches so the per-batch glob read stays O(1) in stream
-    lifetime instead of O(#batches). Readers are correct at any crash
-    point (stateio.compact_batches commit protocol)."""
-    compact_batches(spark, IDX_SCHEMA, _idx_dir(out_dir))
-    compact_batches(spark, DEC_SCHEMA, _dec_dir(out_dir))
-
-
-def _corpus_docs(batch_df: DataFrame) -> DataFrame:
-    """Corpus documents (doc_id 'doc-%08d', spans) -> (numeric doc_id, as the
-    decision path orders keepers numerically; text = the joined text spans)."""
-    # A doc_id without a trailing numeric suffix would extract to ''
-    # -> NULL -> the row silently vanishes from BOTH the kept set and
-    # the dup decisions (NULL never equals the keeper). Ids outside the
-    # corpus convention must fail the batch loudly, not lose data.
-    num = F.regexp_extract("doc_id", r"(\d+)$", 1)
-    checked = F.when(num != "", num.cast("bigint")).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("stream dedup: doc_id has no numeric suffix: "),
-                F.col("doc_id"),
-            )
-        )
-    )
-    return batch_df.select(
-        checked.alias("doc_id"),
-        F.array_join(
-            F.transform(
-                F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
-                lambda s: s["text"],
-            ),
-            " ",
-        ).alias("text"),
-    )
-
-
-def dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    compact_every: int | None = None,
-):
-    """Structured-Streaming wiring (stateio.run_stream): every arriving
-    documents parquet file flows through dedup_batch via foreachBatch
-    (checkpointed batch ids, so restarts redeliver idempotently);
-    compact_every=K compacts both accumulators every K batches."""
-    return run_stream(
-        spark, DOCUMENTS_SCHEMA, input_dir, out_dir,
-        lambda df, b: dedup_batch(spark, _corpus_docs(df), b, out_dir),
-        lambda: compact_state(spark, out_dir),
-        max_files_per_trigger, available_now, compact_every,
-    )

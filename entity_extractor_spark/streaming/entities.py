@@ -43,10 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import graph as G
-from .stateio import batch_dir, compact_batches, read_state, run_stream
+from .stateio import batch_dir, compact_batches, read_state
 
 LAB_SCHEMA = "vertex string, component string"
-EDGES_SCHEMA = "src string, dst string"
 
 
 def _lab_dir(out_dir: str) -> str:
@@ -103,22 +102,3 @@ def compact_state(spark: SparkSession, out_dir: str) -> None:
     the redelivery fence keep working). Run on the stream's own cadence
     so the per-batch glob read stays O(1) in stream lifetime."""
     compact_batches(spark, LAB_SCHEMA, _lab_dir(out_dir))
-
-
-def entity_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    compact_every: int | None = None,
-):
-    """Structured-Streaming wiring (stateio.run_stream): every arriving
-    (src, dst) edge parquet file flows through cc_batch via foreachBatch
-    (checkpointed batch ids => idempotent redelivery after restart)."""
-    return run_stream(
-        spark, EDGES_SCHEMA, input_dir, out_dir,
-        lambda df, b: cc_batch(spark, df, b, out_dir),
-        lambda: compact_state(spark, out_dir),
-        max_files_per_trigger, available_now, compact_every,
-    )

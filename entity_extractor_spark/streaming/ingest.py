@@ -33,16 +33,10 @@ from pyspark.sql import functions as F
 from ..operators import propagate as P
 from ..plans.pipeline import run_pipeline
 from ..schemas import DOCUMENTS_SCHEMA, TRIPLES_SCHEMA
-from .stateio import batch_dir, compact_batches, file_stream, read_state, run_stream
+from .stateio import batch_dir, compact_batches, read_state, run_stream
 
 # node-table columns plus the material's manufacturer_name (J7 identity key)
 ACC_SCHEMA = ", ".join(f"{c} string" for c in (*P.NODE_COLS, "manufacturer_name"))
-
-
-def queue_stream(spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-source stream of documents parquet: every new file under
-    input_dir is an arriving queue message batch."""
-    return file_stream(spark, DOCUMENTS_SCHEMA, input_dir, max_files_per_trigger)
 
 
 def _acc_dir(out_dir: str) -> str:

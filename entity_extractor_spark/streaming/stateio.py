@@ -249,25 +249,15 @@ def compact_batches(spark: SparkSession, schema, acc_dir: str) -> int | None:
 
 
 # ----------------------------------------------------------------- wiring --
-def file_stream(
-    spark: SparkSession, schema, input_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream of parquet files: every new file under input_dir
-    is an arriving micro-batch."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_dir)
-
-
 def run_stream(
     spark: SparkSession, schema, input_dir: str, out_dir: str,
     per_batch: Callable[[DataFrame, int], object], compact: Callable[[], object],
     max_files_per_trigger: int | None = None, available_now: bool = True,
     compact_every: int | None = None,
 ):
-    """Start the foreachBatch stream (checkpointed under out_dir, so a
-    restart redelivers idempotently): each non-empty micro-batch goes to
+    """Start the foreachBatch stream over the parquet files arriving under
+    input_dir (checkpointed under out_dir, so a restart redelivers
+    idempotently): each non-empty micro-batch goes to
     per_batch(df, batch_id), then compact() every compact_every batches.
     available_now=True processes the backlog then stops."""
 
@@ -278,8 +268,11 @@ def run_stream(
         if compact_every and (int(batch_id) + 1) % compact_every == 0:
             compact()
 
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     writer = (
-        file_stream(spark, schema, input_dir, max_files_per_trigger)
+        reader.parquet(input_dir)
         .writeStream.foreachBatch(handle)
         .option("checkpointLocation", _os.path.join(out_dir, "_checkpoint"))
     )

@@ -5,9 +5,8 @@ folder_reader_service.py:140-151; re-expressed as the standard Structured
 Streaming pattern: readStream -> withWatermark -> window -> sink).
 
 Semantics:
-  * each arriving document batch carries an event timestamp (`event_ts`);
-    counts are aggregated per tumbling window and per mention-type-bearing
-    dimension;
+  * each arriving event carries an event timestamp; counts are aggregated
+    per hopping window (or per gap session) and per dimension;
   * the watermark bounds state: windows older than (max event time seen -
     delay) are finalized and their state dropped — without it a 10^12-doc
     stream's window state grows forever;
@@ -98,30 +97,5 @@ def hopping_counts(
             dim_col,
             "n_events",
             "total_value",
-        )
-    )
-
-
-def doc_arrival_counts(
-    docs_stream: DataFrame,
-    ts_col: str = "event_ts",
-    window_seconds: int = 60,
-    watermark_delay: str = "2 minutes",
-) -> DataFrame:
-    """Tumbling event-time window counts of arriving documents (+ total
-    span payload) with late-data tolerance = watermark_delay. Returns a
-    STREAMING DataFrame: window_start, window_end, n_docs, n_spans."""
-    return (
-        docs_stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(F.col(ts_col), f"{window_seconds} seconds"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.size("spans")).cast("long").alias("n_spans"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "n_docs",
-            "n_spans",
         )
     )

@@ -9,7 +9,8 @@
 The pipeline reads a documents table (doc_id string, spans array<struct<
 kind,text,media_ref,offset>>), runs extract -> link -> canonicalize ->
 propagate -> materialize with per-stage lineage commits under --out, and
-prints a one-line JSON summary (rows per table, wall time, triples/sec).
+prints a one-line JSON summary (rows per table from the lineage record,
+wall time, triples/sec).
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from entity_extractor_spark.corpus import CorpusConfig, gazetteer_rows, generate_documents_df
+    from entity_extractor_spark.plans.lineage import LineageLog
     from entity_extractor_spark.plans.pipeline import run_pipeline
     from entity_extractor_spark.schemas import DOCUMENTS_SCHEMA
 
@@ -53,8 +55,11 @@ def main() -> None:
         resume=not args.no_resume,
         repartition=args.repartition,
     )
-    counts = {name: df.count() for name, df in tables.items()}
     dt = time.time() - t0
+    # row counts from the lineage record every commit (and resume) carries:
+    # no Spark job runs after the last commit
+    log = LineageLog(args.out)
+    counts = {name: log.stage_counters(name)["rows"] for name in tables}
     print(json.dumps({
         "tables": counts,
         "wall_sec": round(dt, 2),

@@ -332,10 +332,7 @@ def test_drift_empty_snapshot_raises(spark):
 
 # ------------------------------------------------------------ k-anonymity --
 
-from entity_extractor_spark.operators.audit import (  # noqa: E402
-    k_anonymity_report,
-    k_anonymity_violations,
-)
+from entity_extractor_spark.operators.audit import k_anonymity_report  # noqa: E402
 
 
 def test_k_anonymity_known(spark):
@@ -349,11 +346,6 @@ def test_k_anonymity_known(spark):
     assert (r.violating_groups, r.rows_at_risk) == (2, 3)
     assert r.risk_ppm == 3 * 10**6 // 11
     assert r.k_holds is False
-    v = {
-        (x.country, x.seg): x.group_size
-        for x in k_anonymity_violations(df, ["country", "seg"], 3).collect()
-    }
-    assert v == {("us", "b"): 2, ("de", "a"): 1}
     ok = k_anonymity_report(df, ["country", "seg"], 2).head()
     assert ok.k_holds is False  # the singleton still violates k=2
     assert k_anonymity_report(df, ["seg"], 2).head().k_holds is True
@@ -374,7 +366,7 @@ def test_k_anonymity_validation(spark):
     with pytest.raises(ValueError, match="k must be"):
         k_anonymity_report(df, ["c"], 1)
     with pytest.raises(ValueError, match="k must be"):
-        k_anonymity_violations(df, ["c"], True)
+        k_anonymity_report(df, ["c"], True)
 
 
 # ----------------------------------------------------------- benford_audit --

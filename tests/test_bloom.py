@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from entity_extractor_spark.operators.bloom import (
     bloom_build,
     bloom_probe,
-    bloom_semi_join,
     bloom_stats,
 )
 
@@ -110,21 +109,6 @@ def test_probe_preserves_columns_and_rows(spark):
     out = bloom_probe(facts, "k", bloom, M, K)
     assert out.columns == ["k", "v", "bloom_maybe"]
     assert out.count() == 3  # duplicates kept, nothing dropped
-
-
-def test_semi_join_is_superset_of_true_semi_join(spark):
-    members = [3, 5, 8, 13, 21]
-    dim = spark.createDataFrame([(k,) for k in members], "k long")
-    bloom = bloom_build(dim, "k", M, K)
-    facts = spark.createDataFrame([(k,) for k in range(30)], "k long")
-    kept = {r.k for r in bloom_semi_join(facts, "k", bloom, M, K).collect()}
-    assert set(members) <= kept  # no false negatives
-    bits = _py_bloom(members, M, K)
-    want = {
-        k for k in range(30)
-        if all(_py_pos(k, i, M) in bits for i in range(1, K + 1))
-    }
-    assert kept == want
 
 
 def test_probe_plan_never_shuffles_the_fact_side(spark):

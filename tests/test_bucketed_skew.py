@@ -117,23 +117,3 @@ def test_salted_join_rejects_bad_args(spark):
         salted_join(big, small, "k", how="full")
     with pytest.raises(ValueError):
         salted_join(big, small, "k", salts=0)
-
-
-def test_partitioned_write_prunes_scan(spark):
-    import tempfile
-
-    from entity_extractor_spark.sources.bucketed import write_partitioned
-
-    base = tempfile.mkdtemp(prefix="part_t_") + "/t"
-    df = spark.range(0, 3000).select(
-        F.col("id").alias("v"), (F.col("id") % 10).alias("day")
-    )
-    write_partitioned(df, base, "day")
-    rd = spark.read.parquet(base).where(F.col("day") == 3)
-    plan = rd._jdf.queryExecution().executedPlan().toString()
-    # the filter must land in PartitionFilters (directory pruning), not as
-    # a post-scan Filter over all 10 partitions
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and "day" in pf[0], plan
-    got = sorted(r["v"] for r in rd.collect())
-    assert got == list(range(3, 3000, 10))

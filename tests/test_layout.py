@@ -1,16 +1,12 @@
-"""zorder_values / write_zordered: bit-interleave python replay, guards,
-and the locality payoff (z-ordered files have tighter 2-D bounding boxes
-than a single-column sort)."""
+"""zorder_values: bit-interleave python replay and guards; the layout
+planners (compaction, table GC, zone maps, snapshot retention) against
+brute force."""
 
 from __future__ import annotations
 
 import pytest
 
-from entity_extractor_spark.operators.layout import (
-    layout_report,
-    write_zordered,
-    zorder_values,
-)
+from entity_extractor_spark.operators.layout import zorder_values
 
 
 def _interleave(zx: int, zy: int, bits: int) -> int:
@@ -43,27 +39,6 @@ def test_zvalue_guards(spark):
     wide = spark.createDataFrame([(0, 0), (1 << 50, 1)], "x long, y long")
     with pytest.raises(ValueError, match="too wide"):
         zorder_values(wide, "x", "y", bits=16)
-
-
-def test_zorder_layout_beats_single_column_sort(spark, tmp_path):
-    # deterministic 64x64 grid; 16 files. A single-column sort gives
-    # full-width slabs on the other dimension; z-order gives compact boxes.
-    rows = [(x, y) for x in range(64) for y in range(64)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    zpath = str(tmp_path / "zordered")
-    spath = str(tmp_path / "xsorted")
-    write_zordered(df, zpath, "x", "y", bits=6, num_files=16)
-    df.repartitionByRange(16, "x").write.parquet(spath)
-    zrep = layout_report(spark, zpath, "x", "y").collect()
-    srep = layout_report(spark, spath, "x", "y").collect()
-    z_yspan = sum(r.y_span for r in zrep) / len(zrep)
-    s_yspan = sum(r.y_span for r in srep) / len(srep)
-    # x-sorted slabs span the full y range (63); z-order files must not
-    assert s_yspan >= 60
-    assert z_yspan <= s_yspan / 2
-    # and the z layout still bounds x decently (compact rectangles)
-    z_xspan = sum(r.x_span for r in zrep) / len(zrep)
-    assert z_xspan <= 32
 
 
 def test_zvalue_integer_type_wide_range_no_wraparound(spark):

@@ -135,18 +135,6 @@ def test_resume_skips_done_stages(spark, oracle_result, tmp_path):
     assert log.is_done("chem_nodes")
 
 
-def test_span_invariant_preserved(spark):
-    """input_hint per-row invariant: every doc-level table keeps the ordered
-    span sequence intact. The pipeline never mutates spans; assert the
-    repartitioned pass-through is fingerprint-identical to the input."""
-    from entity_extractor_spark.operators.assemble import check_span_invariant
-
-    cfg = CorpusConfig(n_docs=25)
-    docs = generate_documents_df(spark, cfg)
-    shuffled = docs.repartition(8, F.hash("doc_id"))
-    assert check_span_invariant(docs, shuffled) == 0
-
-
 def test_hub_skew_corpus_matches_oracle(spark, tmp_path):
     """Hub-entity skew end-to-end: a corpus where ~90% of chemical draws hit
     one hub chemical puts most observations into one cluster. The
@@ -190,13 +178,12 @@ def test_mentions_no_match_and_prefilter_equivalence(spark, monkeypatch):
     assert with_pf == without_pf and len(with_pf) > 0
 
 
-def test_mentions_three_paths_equivalent(spark, monkeypatch):
-    """The adaptive mention scan has three physical paths — eager JVM
-    (vocab collect + broadcast), lazy JVM (stream-side theta-join, the
-    MATCHED_VOCAB_MAX overflow fallback) and Aho-Corasick mapInPandas
-    (the >=AC_KEYWORDS_MIN gazetteer path) — all must produce the identical
-    row MULTISET (duplicates included: same word twice in a span = two
-    mentions)."""
+def test_mention_paths_equivalent(spark, monkeypatch):
+    """The adaptive mention scan has two physical paths — eager JVM (vocab
+    collect + broadcast) and Aho-Corasick mapInPandas (the
+    >=AC_KEYWORDS_MIN gazetteer path and the MATCHED_VOCAB_MAX overflow) —
+    and both must produce the identical row MULTISET (duplicates included:
+    same word twice in a span = two mentions)."""
     from collections import Counter
 
     from entity_extractor_spark.operators import mentions as M
@@ -205,17 +192,24 @@ def test_mentions_three_paths_equivalent(spark, monkeypatch):
     docs = generate_documents_df(spark, cfg)
     gaz = gazetteer_rows(cfg)
 
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
     eager = Counter(tuple(r) for r in M.detect_mentions(docs, gaz).collect())
     ac = Counter(tuple(r) for r in M.detect_mentions_ac(docs, gaz).collect())
-    monkeypatch.setattr(M, "MATCHED_VOCAB_MAX", 0)
-    lazy = Counter(tuple(r) for r in M.detect_mentions(docs, gaz).collect())
     assert len(eager) > 0
     assert eager == ac, f"ac diff: {(eager - ac) + (ac - eager)}"
-    assert eager == lazy, f"lazy diff: {(eager - lazy) + (lazy - eager)}"
+    # overflow: a matched vocabulary past the collect cap routes to AC
+    monkeypatch.setattr(M, "MATCHED_VOCAB_MAX", 0)
+    overflow_df = M.detect_mentions(docs, gaz)
+    overflow = Counter(tuple(r) for r in overflow_df.collect())
+    assert eager == overflow, f"overflow diff: {(eager - overflow) + (overflow - eager)}"
+    assert "MapInPandas" in plan(overflow_df)
+    assert "BroadcastNestedLoopJoin" not in plan(overflow_df)
     # dispatch: a huge gazetteer routes to the AC path (plan has no join)
     monkeypatch.setattr(M, "AC_KEYWORDS_MIN", 1)
-    plan = M.detect_mentions(docs, gaz)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan and "BroadcastHashJoin" not in plan
+    huge = plan(M.detect_mentions(docs, gaz))
+    assert "MapInPandas" in huge and "BroadcastHashJoin" not in huge
 
 
 def test_aho_corasick_matches_bruteforce():

@@ -238,7 +238,6 @@ def test_join_size_estimate_validates_and_empty(spark):
 
 from entity_extractor_spark.operators.sketch import (  # noqa: E402
     hll_estimate,
-    hll_merge,
     hll_registers,
 )
 
@@ -285,26 +284,6 @@ def test_hll_estimate_matches_python_and_is_accurate(spark):
     # standard error ~1.04/sqrt(4096) = 1.6%; allow 4 sigma
     assert abs(row.est_distinct - n) < 0.07 * n
     assert row.n_buckets + row.zero_buckets == 4096
-
-
-def test_hll_merge_equals_rebuild(spark):
-    a_keys = [f"a-{i}" for i in range(800)]
-    b_keys = [f"b-{i}" for i in range(600)] + a_keys[:200]  # overlap
-    df_a = spark.createDataFrame([("g", k) for k in a_keys], "grp string, k string")
-    df_b = spark.createDataFrame([("g", k) for k in b_keys], "grp string, k string")
-    merged = hll_merge(
-        hll_registers(df_a, ["grp"], "k", 12),
-        hll_registers(df_b, ["grp"], "k", 12),
-        ["grp"],
-    )
-    whole = hll_registers(df_a.union(df_b), ["grp"], "k", 12)
-    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, whole.collect()))
-    est_m = hll_estimate(merged, ["grp"], 12).head().est_distinct
-    est_w = hll_estimate(whole, ["grp"], 12).head().est_distinct
-    assert est_m == est_w
-    # idempotent: re-merging a shard changes nothing
-    again = hll_merge(merged, hll_registers(df_a, ["grp"], "k", 12), ["grp"])
-    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, merged.collect()))
 
 
 def test_hll_null_keys_skipped_and_empty_group_absent(spark):

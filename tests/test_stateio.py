@@ -86,7 +86,8 @@ def test_dedup_gate_equivalent_under_midstream_compaction(spark, tmp_path):
             df = spark.createDataFrame(rows, "doc_id bigint, text string")
             SD.dedup_batch(spark, df, b, out)
             if out.endswith("compacted") and b == 1:
-                SD.compact_state(spark, out)
+                compact_batches(spark, SD.IDX_SCHEMA, SD._idx_dir(out))
+                compact_batches(spark, SD.DEC_SCHEMA, SD._dec_dir(out))
         return sorted(
             (r["doc_id"], r["keeper"], r["is_dup"])
             for r in SD.read_decisions(spark, out).collect()

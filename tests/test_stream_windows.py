@@ -1,96 +1,13 @@
 """Watermarked event-time windowed aggregation (streaming/windows.py):
-append mode emits each finalized window exactly once; late-but-in-horizon
-events count; events behind the watermark are dropped."""
+hopping and session windows run unchanged on a stream, append mode emits
+each finalized window exactly once, and every emitted row equals the
+batch run's row."""
 
 from __future__ import annotations
 
 import glob
 import os
 import shutil
-
-from pyspark.sql import functions as F
-
-SCHEMA = (
-    "doc_id string, event_ts timestamp, "
-    "spans array<struct<kind string, text string, media_ref string, offset int>>"
-)
-
-
-def _write_batch(spark, in_dir: str, batch: int, rows: list[tuple]) -> None:
-    df = spark.createDataFrame(rows, SCHEMA)
-    tmp = in_dir + f"_tmp{batch}"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    src = glob.glob(f"{tmp}/part-*.parquet")[0]
-    os.makedirs(in_dir, exist_ok=True)
-    shutil.move(src, os.path.join(in_dir, f"b{batch}.parquet"))
-    shutil.rmtree(tmp)
-
-
-def _row(doc_id: str, sec: int, n_spans: int = 1):
-    import datetime
-
-    ts = datetime.datetime(2026, 1, 1) + datetime.timedelta(seconds=sec)
-    spans = [("text", f"s{i}", None, i) for i in range(n_spans)]
-    return (doc_id, ts, spans)
-
-
-def test_watermarked_window_counts(spark, tmp_path):
-    from entity_extractor_spark.streaming.windows import doc_arrival_counts
-
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    _write_batch(spark, in_dir, 0, [_row("d1", 0), _row("d2", 30, 2), _row("d3", 100)])
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    counts = doc_arrival_counts(stream, window_seconds=60, watermark_delay="2 minutes")
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # watermark = 100s - 120s < 0: nothing finalized yet
-        assert spark.sql("select * from win_counts").count() == 0
-
-        # batch 1 advances event time to 400s -> watermark 280s: the first
-        # two windows ([0,60) and [60,120)) finalize and emit exactly once
-        _write_batch(spark, in_dir, 1, [_row("d4", 400)])
-        q.processAllAvailable()
-        got = {
-            int(r["ws"]): (r["n_docs"], r["n_spans"])
-            for r in spark.sql(
-                "select unix_timestamp(window_start) - unix_timestamp(timestamp'2026-01-01') as ws,"
-                " n_docs, n_spans from win_counts"
-            ).collect()
-        }
-        assert got == {0: (2, 3), 60: (1, 1)}
-
-        # a late event at 50s is BEHIND the 280s watermark: dropped; a live
-        # event at 500s advances the watermark to 380s -> window [360,420)
-        # containing d4 finalizes; the dropped event never appears
-        _write_batch(spark, in_dir, 2, [_row("late", 50), _row("d5", 500)])
-        q.processAllAvailable()
-        _write_batch(spark, in_dir, 3, [_row("d6", 700)])
-        q.processAllAvailable()
-        got = {
-            int(r["ws"]): (r["n_docs"], r["n_spans"])
-            for r in spark.sql(
-                "select unix_timestamp(window_start) - unix_timestamp(timestamp'2026-01-01') as ws,"
-                " n_docs, n_spans from win_counts"
-            ).collect()
-        }
-        assert got[0] == (2, 3), "finalized window must not change on late data"
-        assert 360 in got and got[360] == (1, 1)
-        assert 480 in got and got[480] == (1, 1)
-    finally:
-        q.stop()
 
 
 EVENTS_SCHEMA = "event_id bigint, ts timestamp, user_id bigint, value double"

@@ -177,43 +177,3 @@ def test_consolidated_single_scan_50_batches(spark, tmp_path):
     # the state the next MERGE reads holds exactly the newest row per id
     c1 = read_accumulated_nodes(spark, out_dir).where("id = 'c1'").collect()
     assert [r["pfas_status"] for r in c1] == ["YES"]
-
-
-def test_stateful_first_delivery_dedupe(spark, tmp_path):
-    """applyInPandasWithState keyed dedupe: overlapping doc_ids across
-    micro-batches emit exactly once (T5 as a streaming-native operator)."""
-    import glob
-    import shutil
-
-    from entity_extractor_spark.streaming.ingest import queue_stream
-    from entity_extractor_spark.streaming.stateful import first_delivery_only
-
-    in_dir = str(tmp_path / "dup_in")
-    os.makedirs(in_dir)
-    docs = generate_documents_df(spark, CorpusConfig(n_docs=40))
-    ranges = [(0, 25), (15, 40)]  # overlap 15..24 redelivered in batch 2
-    for b, (lo, hi) in enumerate(ranges):
-        part = docs.where(
-            (F.regexp_extract("doc_id", r"doc-(\d+)", 1).cast("int") >= lo)
-            & (F.regexp_extract("doc_id", r"doc-(\d+)", 1).cast("int") < hi)
-        )
-        tmp_out = str(tmp_path / f"_d{b}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp_out)
-        src = glob.glob(f"{tmp_out}/part-*.parquet")[0]
-        dst = f"{in_dir}/d{b}.parquet"
-        shutil.move(src, dst)
-        os.utime(dst, (1_700_000_000 + b * 60,) * 2)
-
-    out_dir = str(tmp_path / "dedup_out")
-    q = (
-        first_delivery_only(queue_stream(spark, in_dir, max_files_per_trigger=1))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 40  # 25 + 25 delivered, 10 duplicates dropped
-    assert got.select("doc_id").distinct().count() == 40

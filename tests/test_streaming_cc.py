@@ -1,7 +1,6 @@
 """Streaming canonical-entity labels: sequential batches == full CC over
 the union, deltas record exactly the moved vertices, redelivery is a
-no-op, compaction preserves the fold, and the foreachBatch wiring runs
-end-to-end."""
+no-op, and compaction preserves the fold."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ from entity_extractor_spark.operators.graph import connected_components
 from entity_extractor_spark.streaming.entities import (
     cc_batch,
     compact_state,
-    entity_stream,
     read_labels,
 )
 
@@ -79,19 +77,6 @@ def test_compaction_preserves_fold_and_fence(spark, tmp_path):
     assert fenced == _labels(connected_components(_edges_df(spark, batches[0])))
     # absorb one more batch on top of the compacted head
     cc_batch(spark, _edges_df(spark, batches[2]), 2, out)
-    assert _labels(read_labels(spark, out)) == _labels(
-        connected_components(_edges_df(spark, edges))
-    )
-
-
-def test_entity_stream_end_to_end(spark, tmp_path):
-    out = str(tmp_path / "cc")
-    inp = str(tmp_path / "edges_in")
-    edges = _rand_edges(17, 30, 40)
-    _edges_df(spark, edges[:20]).coalesce(1).write.mode("append").parquet(inp)
-    _edges_df(spark, edges[20:]).coalesce(1).write.mode("append").parquet(inp)
-    q = entity_stream(spark, inp, out, max_files_per_trigger=1, compact_every=2)
-    q.awaitTermination(120)
     assert _labels(read_labels(spark, out)) == _labels(
         connected_components(_edges_df(spark, edges))
     )

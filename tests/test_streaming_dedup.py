@@ -1,6 +1,5 @@
 """Streaming dedup gate: cross-batch chains collapse to the earliest kept
-doc, the kept set is LSH-collision-free, redelivery is a no-op, and the
-foreachBatch wiring runs end-to-end."""
+doc, the kept set is LSH-collision-free, redelivery is a no-op."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import pyspark.sql.functions as F
 from entity_extractor_spark.operators import dedupe as D
 from entity_extractor_spark.streaming.dedup import (
     dedup_batch,
-    dedup_stream,
     read_decisions,
     read_index,
 )
@@ -80,55 +78,6 @@ def test_streaming_dedup_redelivery_idempotent(spark, tmp_path):
     dedup_batch(spark, _base_docs(spark, 40, 50), 2, out)
     again = sorted(map(tuple, dedup_batch(spark, b1, 1, out).collect()))
     assert again == first
-
-
-def test_dedup_stream_foreachbatch(spark, tmp_path):
-    """foreachBatch wiring over corpus-shaped (doc_id, spans) files."""
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-
-    def spansify(df, id_offset=0):
-        return df.select(
-            F.format_string("doc-%08d", (F.col("doc_id") + id_offset).cast("int")).alias("doc_id"),
-            F.array(
-                F.struct(
-                    F.lit("text").alias("kind"),
-                    F.col("text").alias("text"),
-                    F.lit(None).cast("string").alias("media_ref"),
-                    F.lit(0).alias("offset"),
-                )
-            ).alias("spans"),
-        )
-
-    import glob
-    import os
-    import shutil
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    batches = [
-        spansify(docs.where("doc_id < 30")),
-        spansify(docs.where("doc_id >= 30 and doc_id < 60")).unionByName(
-            spansify(docs.where("doc_id = 11"), id_offset=5000)  # clone of doc 11
-        ),
-    ]
-    os.makedirs(src, exist_ok=True)
-    for i, b in enumerate(batches):  # file-stream source wants plain FILES
-        tmp = str(tmp_path / f"_tmp{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], f"{src}/f{i}.parquet")
-        shutil.rmtree(tmp)
-        os.utime(f"{src}/f{i}.parquet", (1_700_000_000 + i * 60,) * 2)
-
-    # compact_every=2: the accumulators fold into one compact dir after the
-    # second batch; every assertion below reads through the compacted state
-    q = dedup_stream(spark, src, out, max_files_per_trigger=1, compact_every=2)
-    q.awaitTermination(120)
-    dec = {r["doc_id"]: (r["keeper"], r["is_dup"]) for r in read_decisions(spark, out).collect()}
-    assert len(dec) == 61
-    assert dec[5011] == (11, True)
-    assert os.path.isdir(f"{out}/decisions/compact_000001")
-    assert not glob.glob(f"{out}/decisions/batch_*")
-    assert os.path.isdir(f"{out}/lsh_index/compact_000001")
 
 
 def test_streaming_dedup_reingest_of_kept_doc_stays_kept(spark, tmp_path):

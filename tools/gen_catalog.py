@@ -37,7 +37,6 @@ SECTIONS: list[tuple[str, str]] = [
     ("operators.mentions", "KG pipeline — mention detection"),
     ("operators.link", "KG pipeline — linking & canonicalization"),
     ("operators.propagate", "KG pipeline — status propagation"),
-    ("operators.assemble", "KG pipeline — document assembly"),
     ("operators.review", "KG pipeline — review / re-propagation"),
     ("operators.disambiguate", "Entity disambiguation (TF-IDF cosine)"),
     ("operators.kg_training", "KG training data"),
@@ -70,9 +69,7 @@ SECTIONS: list[tuple[str, str]] = [
     ("operators.multimodal", "Multimodal (binary media) columns"),
     ("functions.core", "Scalar functions (F1–F13)"),
     ("functions.lattice", "Source-lattice merge (F12)"),
-    ("sources.tables", "Sources"),
-    ("sources.crawl", "Crawl pagination"),
-    ("sources.bucketed", "Bucketed / partitioned layout"),
+    ("sources.bucketed", "Bucketed layout"),
     ("plans.pipeline", "Pipeline plan & stage DAG"),
     ("plans.lineage", "Lineage, resume & sinks"),
     ("plans.tableio", "Table-format seam (Iceberg-gated)"),
@@ -81,7 +78,6 @@ SECTIONS: list[tuple[str, str]] = [
     ("streaming.entities", "Streaming — entity CC maintenance"),
     ("streaming.windows", "Streaming — windows"),
     ("streaming.join", "Streaming — interval join"),
-    ("streaming.stateful", "Streaming — custom stateful"),
     ("streaming.stateio", "Streaming — state storage"),
     ("corpus", "Synthetic corpus (test/bench input)"),
 ]
