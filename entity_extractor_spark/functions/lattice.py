@@ -17,7 +17,7 @@ Reproduces reference behavior exactly:
 from __future__ import annotations
 
 YES, NO, PENDING = "YES", "NO", "PENDING"
-MANUAL, VAI, OECD, ECHA, NONE = "MANUAL", "VAI", "OECD", "ECHA", "NONE"
+MANUAL, VAI, OECD, NONE = "MANUAL", "VAI", "OECD", "NONE"
 
 # reference: artifact_ingestor_service.py:1207-1235
 TRANSITION_MAP: dict[str, str | None] = {
@@ -116,8 +116,6 @@ def fold_observation(
 # reference: get_parent_pfas_resolution, artifact_ingestor_service.py:819-879
 _PREF_WHEN_PENDING = [OECD, VAI, MANUAL]
 _PREF_OTHERWISE = [VAI, OECD, MANUAL]
-
-STATUS_RANK = {NO: 0, PENDING: 1, YES: 2}
 
 
 def resolve_material(children: list[tuple[str, str]]) -> tuple[str, str]:

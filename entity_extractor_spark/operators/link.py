@@ -78,9 +78,8 @@ def assign_clusters(obs: DataFrame, existing_nodes: DataFrame | None = None) -> 
     )
     en = None
     if existing_nodes is not None:
-        id_col = F.col("id") if "id" in existing_nodes.columns else F.lit(None).cast("string")
         en = existing_nodes.where(F.col("node_type") == "CHEMICAL").select(
-            id_col.alias("existing_id"),
+            F.col("id").alias("existing_id"),
             F.col("pfas_status").alias("init_status"),
             F.col("pfas_information_source").alias("init_source"),
             F.col("name").alias("init_name"),

@@ -273,7 +273,7 @@ def run_pipeline(
     headers = X.resolve_headers(parsed)
     chems = X.dedupe_chemicals(parsed)
     existing_keys = None
-    if existing_nodes is not None and "manufacturer_name" in existing_nodes.columns:
+    if existing_nodes is not None:
         # re-ingest MERGE: prior materials make their identity keys occupied.
         # The key MUST be built with the same norm_name the winner side uses
         # (extract.winner_docs) — an inlined copy here would silently desync

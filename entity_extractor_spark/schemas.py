@@ -14,9 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -38,55 +36,6 @@ DOCUMENTS_SCHEMA = StructType(
     ]
 )
 
-MENTIONS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("span_offset", IntegerType(), False),
-        StructField("keyword", StringType(), False),
-        StructField("word", StringType(), False),
-        StructField("confidence", DoubleType(), False),
-        StructField("mtype", StringType(), False),
-    ]
-)
-
-# One parsed chemical observation (the reference's ChemicalsOpenAiResponse,
-# dto/chemical_dto.py:21-29) plus provenance ordering columns.
-OBSERVATIONS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("seq", IntegerType(), False),       # span offset within doc
-        StructField("chemical_name", StringType(), False),
-        StructField("cas_number", StringType(), True),  # trimmed-or-null (F6)
-        StructField("weight_percent", StringType(), True),
-        StructField("tag", StringType(), True),         # PFAS|NO_PFAS|PENDING
-        StructField("source", StringType(), True),      # MANUAL|VAI|OECD|ECHA|NONE
-        StructField("manufacturer_id", StringType(), False),
-        StructField("material_id", StringType(), False),
-        StructField("ord", LongType(), False),          # global replay order
-    ]
-)
-
-NODES_SCHEMA = StructType(
-    [
-        StructField("id", StringType(), False),
-        StructField("name", StringType(), False),
-        StructField("node_type", StringType(), False),  # MATERIAL|CHEMICAL
-        StructField("cas_number", StringType(), True),
-        StructField("manufacturer_id", StringType(), True),
-        StructField("pfas_status", StringType(), False),
-        StructField("pfas_information_source", StringType(), False),
-    ]
-)
-
-MANUFACTURERS_SCHEMA = StructType(
-    [
-        StructField("id", StringType(), False),
-        StructField("name", StringType(), False),
-        StructField("city", StringType(), True),
-        StructField("country", StringType(), True),
-    ]
-)
-
 TRIPLES_SCHEMA = StructType(
     [
         StructField("subj", StringType(), False),
@@ -96,17 +45,5 @@ TRIPLES_SCHEMA = StructType(
         StructField("obj_id", StringType(), True),
         StructField("weight_percent", StringType(), True),
         StructField("doc_id", StringType(), True),
-    ]
-)
-
-LINEAGE_SCHEMA = StructType(
-    [
-        StructField("stage", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("status", StringType(), False),  # done|failed
-        StructField("mentions", LongType(), True),
-        StructField("candidates", LongType(), True),
-        StructField("linked", LongType(), True),
-        StructField("dropped", LongType(), True),
     ]
 )

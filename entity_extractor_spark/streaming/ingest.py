@@ -9,18 +9,21 @@ Semantics reproduced:
     pipeline into its own lineage dir with resume=True, so a redelivered /
     restarted batch skips every stage it already committed;
   * sequential coupling (the reference processes files one-by-one against
-    the graph built so far): each batch passes the ACCUMULATED node table
-    as `existing_nodes`, so material identities are first-batch-wins (J7)
-    and chemical nodes are adopted + lattice-folded from their prior state
-    (exact DFA sequence split — see operators/link.py assign_clusters);
+    the graph built so far): each batch passes the node state of the
+    batches BEFORE it as `existing_nodes`, so material identities are
+    first-batch-wins (J7) and chemical nodes are adopted + lattice-folded
+    from their prior state (exact DFA sequence split — see
+    operators/link.py assign_clusters);
   * visibility-timeout lease (T1) needs no analog: Spark task retry +
     idempotent stage commits cover redelivery.
 
-Scale notes: one micro-batch = one run of the batch DAG (all-stage
-parallelism applies within a batch); state follows the stateio layout and
-read (each batch overwrites only its own subdir => idempotent under
-reprocessing; a node's current state is its newest batch's row, for the
-MERGE input and consolidation alike). On Iceberg: a MERGE INTO per batch.
+State: there is no separate node store. A micro-batch is one run of the
+batch DAG into out_dir/batch_NNNNNN, and the `materials` and `chem_nodes`
+stage tables it commits there ARE the stream's node state: a node's
+current value is its newest batch's row (stateio.read_state). The MERGE
+read is fenced to batches < the batch being processed, so a redelivered or
+force-rerun batch never sees its own (or a later batch's) rows. On
+Iceberg: a MERGE INTO per batch.
 """
 
 from __future__ import annotations
@@ -33,29 +36,37 @@ from pyspark.sql import functions as F
 from ..operators import propagate as P
 from ..plans.pipeline import run_pipeline
 from ..schemas import DOCUMENTS_SCHEMA, TRIPLES_SCHEMA
-from .stateio import batch_dir, compact_batches, read_state, run_stream
+from .stateio import batch_dir, read_state
 
-# node-table columns plus the material's manufacturer_name (J7 identity key)
-ACC_SCHEMA = ", ".join(f"{c} string" for c in (*P.NODE_COLS, "manufacturer_name"))
-
-
-def _acc_dir(out_dir: str) -> str:
-    return os.path.join(out_dir, "nodes_acc")
-
-
-def read_accumulated_nodes(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Current node state of a streaming ingest dir — exactly one row per
-    id, the newest batch's (stateio.read_state over the newest compaction
-    plus the live batch tail) — or None before the first batch. This is
-    the `existing_nodes` every MERGE batch folds onto."""
-    return read_state(spark, ACC_SCHEMA, _acc_dir(out_dir), key="id")
+# The node state's read schemas over the committed stage tables. Material
+# rows keep manufacturer_name (the J7 identity key); their node_type is a
+# literal, not a column, so a node_type filter on the state prunes the
+# other table's scan and aggregate from the plan.
+_MATERIAL_COLS = ", ".join(
+    f"{c} string" for c in (*P.NODE_COLS, "manufacturer_name") if c != "node_type"
+)
+_CHEM_COLS = ", ".join(f"{c} string" for c in ("chem_id", "name", *P.NODE_COLS[3:]))
 
 
-def compact_nodes(spark: SparkSession, out_dir: str) -> None:
-    """Compact the node accumulator's batch subdirs into one dir so the
-    per-batch glob read stays O(1) in stream lifetime (the last-wins batch
-    order survives as the materialized _batch column)."""
-    compact_batches(spark, ACC_SCHEMA, _acc_dir(out_dir))
+def read_accumulated_nodes(
+    spark: SparkSession, out_dir: str, before_batch: int | None = None
+) -> DataFrame | None:
+    """Current node state of a streaming ingest dir, fenced to batches <
+    before_batch: each material's newest committed `materials` row and
+    each chemical's newest `chem_nodes` row (its total fold), as NODE_COLS
+    + manufacturer_name (null on chemicals) — or None before the first
+    committed batch. This is the `existing_nodes` every MERGE batch folds
+    onto."""
+    mats = read_state(
+        spark, _MATERIAL_COLS, out_dir, key="id", before_batch=before_batch, table="materials"
+    )
+    chems = read_state(
+        spark, _CHEM_COLS, out_dir, key="chem_id", before_batch=before_batch, table="chem_nodes"
+    )
+    if mats is None or chems is None:
+        return None
+    mats = mats.withColumn("node_type", F.lit("MATERIAL")).select(*P.NODE_COLS, "manufacturer_name")
+    return mats.unionByName(P.chemical_node_rows(chems), allowMissingColumns=True)
 
 
 def process_batch(
@@ -65,19 +76,13 @@ def process_batch(
     out_dir: str,
     gazetteer: list[dict] | None = None,
 ) -> dict[str, DataFrame]:
-    """One micro-batch through the batch DAG, merging into prior state."""
-    tables = run_pipeline(
+    """One micro-batch through the batch DAG into its own batch dir,
+    merging into the node state of the batches before it; nothing runs
+    after the DAG (its committed tables are the state later batches read)."""
+    return run_pipeline(
         spark, batch_df, batch_dir(out_dir, batch_id), gazetteer=gazetteer,
-        existing_nodes=read_accumulated_nodes(spark, out_dir),
+        existing_nodes=read_accumulated_nodes(spark, out_dir, before_batch=batch_id),
     )
-    # accumulate this batch's node identities (material rows keep their
-    # manufacturer_name: the J7 identity probe needs it); overwrite-by-batch
-    # subdir => reprocessing the same batch id is a no-op
-    acc = tables["materials"].select(*P.NODE_COLS, "manufacturer_name").unionByName(
-        P.chemical_node_rows(tables["chem_nodes"]), allowMissingColumns=True
-    )
-    acc.write.mode("overwrite").parquet(batch_dir(_acc_dir(out_dir), batch_id))
-    return tables
 
 
 def streaming_ingest(
@@ -87,18 +92,28 @@ def streaming_ingest(
     gazetteer: list[dict] | None = None,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    compact_every: int | None = None,
 ):
-    """Start the ingest stream; with available_now=True processes the
-    backlog then stops (the batch-test trigger). Returns the StreamingQuery.
-    compact_every=K folds the node accumulator's batch subdirs into one
-    compact dir every K batches (stateio commit protocol — crash-safe)."""
-    return run_stream(
-        spark, DOCUMENTS_SCHEMA, input_dir, out_dir,
-        lambda df, b: process_batch(spark, df, b, out_dir, gazetteer),
-        lambda: compact_nodes(spark, out_dir),
-        max_files_per_trigger, available_now, compact_every,
+    """Start the foreachBatch stream over the document parquet files
+    arriving under input_dir (checkpointed under out_dir, so a restart
+    redelivers idempotently): each non-empty micro-batch goes to
+    process_batch. available_now=True processes the backlog then stops
+    (the batch-test trigger). Returns the StreamingQuery."""
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            process_batch(spark, batch_df, int(batch_id), out_dir, gazetteer)
+
+    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    writer = (
+        reader.parquet(input_dir)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
     )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def consolidated(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:

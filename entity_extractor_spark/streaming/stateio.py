@@ -1,6 +1,7 @@
-"""The one owner of streaming accumulator state (ingest, dedup, entity
-CC): the batch_NNNNNN dir layout, the state read (a keyed state's current
-value is its newest batch's row) and the foreachBatch stream wiring.
+"""The storage side of streaming state (ingest, dedup, entity CC): the
+batch_NNNNNN dir layout, the fenced state read (a keyed state's current
+value is its newest batch's row), the glob read and compaction. The one
+foreachBatch query is ingest.streaming_ingest.
 
 ALL filesystem access — reads, existence probes, listings, deletes,
 manifest IO — goes through the Spark reader or the JVM's Hadoop
@@ -16,7 +17,7 @@ import functools as _functools
 import json as _json
 import os as _os
 import re as _re
-from typing import Callable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -247,35 +248,3 @@ def compact_batches(spark: SparkSession, schema, acc_dir: str) -> int | None:
             _delete(spark, _os.path.join(acc_dir, d))
     return upto
 
-
-# ----------------------------------------------------------------- wiring --
-def run_stream(
-    spark: SparkSession, schema, input_dir: str, out_dir: str,
-    per_batch: Callable[[DataFrame, int], object], compact: Callable[[], object],
-    max_files_per_trigger: int | None = None, available_now: bool = True,
-    compact_every: int | None = None,
-):
-    """Start the foreachBatch stream over the parquet files arriving under
-    input_dir (checkpointed under out_dir, so a restart redelivers
-    idempotently): each non-empty micro-batch goes to
-    per_batch(df, batch_id), then compact() every compact_every batches.
-    available_now=True processes the backlog then stops."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        per_batch(batch_df, int(batch_id))
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            compact()
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    writer = (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _os.path.join(out_dir, "_checkpoint"))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,16 +1,20 @@
-"""Dead-code gate: every top-level def must be reachable from an entry point.
+"""Dead-code gate: every top-level def and module-level constant must be
+reachable from an entry point.
 
 A module-qualified reachability pass over the repo's Python sources, with
 `ast` only (no import, no Spark). Names resolve per module through imports,
 module aliases, relative imports, package submodules and `import *`
 re-exports, so a def is not kept alive merely because another module has a
-def of the same name.
+def of the same name. A module-level constant (a top-level assignment to
+plain names, dunders such as `__all__` exempt) counts as a def whose body
+is its assigned value.
 
 Roots:
 - every top-level def in `contract/`, `plans/`, `tools/`, `perfbench/`,
   `bench.py`, `run_kg.py` and `__spark_entry__.py`;
-- the module-level statements of every module (they run on import),
-  including decorators, default values and base classes of top-level defs;
+- the module-level statements of every module (they run on import) other
+  than constant assignments, including decorators, default values and
+  base classes of top-level defs;
 - identifier strings in root files: perfbench's shims patch functions by
   attribute name.
 
@@ -38,6 +42,27 @@ ALLOWLIST = {
 }
 
 _IDENT = re.compile(r"[A-Za-z_]\w*\Z")
+_DUNDER = re.compile(r"__\w+__\Z")
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _constant_names(node) -> list[str]:
+    """Names a top-level assignment binds as module constants; [] when
+    `node` is not such an assignment (or binds an attribute, subscript,
+    starred target or dunder), so that it stays an import-time root."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    names = []
+    for t in targets:
+        for e in t.elts if isinstance(t, (ast.Tuple, ast.List)) else [t]:
+            if not isinstance(e, ast.Name) or _DUNDER.match(e.id):
+                return []
+            names.append(e.id)
+    return names
 
 
 class Module:
@@ -45,11 +70,12 @@ class Module:
         self.name, self.path, self.is_pkg, self.is_root = name, path, is_pkg, is_root
         with open(path, encoding="utf-8") as fh:
             self.tree = ast.parse(fh.read(), path)
-        self.defs = {
-            n.name: n
-            for n in self.tree.body
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        }
+        self.defs = {n.name: n for n in self.tree.body if isinstance(n, _FUNCS)}
+        self.consts: dict[str, list] = {}  # constant name -> its assignments
+        for n in self.tree.body:
+            for name in _constant_names(n):
+                self.consts.setdefault(name, []).append(n)
+                self.defs.setdefault(name, n)
         self.bindings: dict[str, tuple] = {}  # module-level import bindings
         self.stars: list[str] = []
         self.all: list[str] | None = None
@@ -202,7 +228,10 @@ def _graph() -> Graph:
 
 
 def _import_time_nodes(node):
-    """Parts of a top-level def that run when its module is imported."""
+    """Parts of a top-level def that run when its module is imported (a
+    constant's value is its body instead)."""
+    if not isinstance(node, _FUNCS):
+        return []
     out = list(node.decorator_list)
     if isinstance(node, ast.ClassDef):
         out += node.bases + [k.value for k in node.keywords]
@@ -211,8 +240,20 @@ def _import_time_nodes(node):
     return out
 
 
+def _body(mod: Module, name: str) -> list:
+    """What a reached def or constant reaches: its body and the values of
+    every top-level assignment to its name."""
+    node = mod.defs[name]
+    values = [a.value if isinstance(a, ast.Assign) else a for a in mod.consts.get(name, ())]
+    if isinstance(node, ast.ClassDef):
+        return [*node.body, *values]
+    if isinstance(node, _FUNCS):
+        return [node.args, *node.body, *values]
+    return values
+
+
 def unreached_defs() -> list[tuple[str, int, str]]:
-    """(path, line, name) of every top-level def no root reaches."""
+    """(path, line, name) of every top-level def or constant no root reaches."""
     g = _graph()
     by_name: dict[str, list[tuple[str, str]]] = {}
     for m in g.mods.values():
@@ -221,8 +262,7 @@ def unreached_defs() -> list[tuple[str, int, str]]:
 
     todo: set[tuple[str, str]] = set()
     for m in g.mods.values():
-        stmts = [n for n in m.tree.body if n.__class__.__name__ not in
-                 ("FunctionDef", "AsyncFunctionDef", "ClassDef")]
+        stmts = [n for n in m.tree.body if not isinstance(n, _FUNCS) and not _constant_names(n)]
         stmts += [x for d in m.defs.values() for x in _import_time_nodes(d)]
         todo |= g.references(m.name, stmts)
         if m.is_root:
@@ -239,9 +279,7 @@ def unreached_defs() -> list[tuple[str, int, str]]:
             continue
         reached.add(key)
         modname, name = key
-        node = g.mods[modname].defs[name]
-        body = node.body if isinstance(node, ast.ClassDef) else [node.args, *node.body]
-        todo |= g.references(modname, body) - reached
+        todo |= g.references(modname, _body(g.mods[modname], name)) - reached
 
     out = []
     for m in g.mods.values():

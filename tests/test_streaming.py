@@ -17,12 +17,15 @@ from entity_extractor_spark.corpus import (
     generate_documents_local,
 )
 from entity_extractor_spark.oracle import finalize, ingest_corpus
+from entity_extractor_spark.plans.lineage import LineageLog
+from entity_extractor_spark.plans.pipeline import STAGE_ORDER
 from entity_extractor_spark.streaming.ingest import (
     consolidated,
     process_batch,
     read_accumulated_nodes,
     streaming_ingest,
 )
+from entity_extractor_spark.streaming.stateio import batch_dir
 
 # 3 x 100 docs: enough chemicals recur across >= 3 batches that a MERGE
 # reading anything but the newest accumulated row per id drifts in status
@@ -77,10 +80,9 @@ def test_batches_processed_in_order(stream_result):
     assert len(batches) == 3, batches
 
 
-def test_consolidated_matches_oracle(spark, stream_result):
+def _assert_matches_oracle(spark, out_dir):
     want_nodes, want_triples = _oracle_nodes()
-    tables = consolidated(spark, stream_result)
-    manu = {}  # id -> name, resolve via materials' manufacturer ids
+    tables = consolidated(spark, out_dir)
     # nodes comparison mirrors test_pipeline_e2e: (name, type, cas, manu_name, status, source)
     acc = tables["nodes"].collect()
     # manufacturer names: material rows carry manufacturer_name
@@ -108,8 +110,19 @@ def test_consolidated_matches_oracle(spark, stream_result):
         for r in tables["triples"].collect()
     }
     assert got_triples == want_triples, (
-        f"missing={list(want_triples - got_triples)[:5]} extra={list(got_triples - want_triples)[:5]}"
+        f"missing={len(want_triples - got_triples)} of {len(want_triples)} "
+        f"e.g. {list(want_triples - got_triples)[:5]} extra={list(got_triples - want_triples)[:5]}"
     )
+
+
+def _read_input(spark, stream_result, name):
+    return spark.read.schema(
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    ).parquet(os.path.join(os.path.dirname(stream_result), "stream_in", name))
+
+
+def test_consolidated_matches_oracle(spark, stream_result):
+    _assert_matches_oracle(spark, stream_result)
 
 
 def test_redelivery_idempotent(spark, stream_result):
@@ -117,63 +130,73 @@ def test_redelivery_idempotent(spark, stream_result):
     before = consolidated(spark, stream_result)
     before_triples = {(r["subj"], r["pred"], r["obj"]) for r in before["triples"].collect()}
     # redeliver batch 1's input as the same batch id
-    in_files = spark.read.schema(
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    ).parquet(os.path.join(os.path.dirname(stream_result), "stream_in", "b1.parquet"))
-    process_batch(spark, in_files, 1, stream_result, gazetteer_rows(CFG))
+    process_batch(spark, _read_input(spark, stream_result, "b1.parquet"), 1, stream_result,
+                  gazetteer_rows(CFG))
     after = consolidated(spark, stream_result)
     after_triples = {(r["subj"], r["pred"], r["obj"]) for r in after["triples"].collect()}
     assert before_triples == after_triples
 
 
+def test_force_rerun_middle_batch_matches_oracle(spark, stream_result):
+    """Force-rerunning a middle batch (lineage invalidated from `winners`,
+    batches after it already committed) rebuilds it against the state of
+    the batches BEFORE it only: its own committed materials must not mark
+    its winners' identities as already taken, nor later batches' nodes
+    leak into its fold."""
+    LineageLog(batch_dir(stream_result, 1)).invalidate_from("winners", STAGE_ORDER)
+    process_batch(spark, _read_input(spark, stream_result, "b1.parquet"), 1, stream_result,
+                  gazetteer_rows(CFG))
+    _assert_matches_oracle(spark, stream_result)
+
+
 def test_consolidated_single_scan_50_batches(spark, tmp_path):
     """Consolidation over 50 micro-batches must be ONE glob parquet scan of
     the triples (a per-batch union loop grows the plan linearly with batch
-    count), and last-wins upsert semantics must hold across the glob read."""
+    count), and last-wins upsert semantics must hold across the glob read
+    of each batch's committed stage tables."""
     out_dir = str(tmp_path / "many_out")
-    acc = os.path.join(out_dir, "nodes_acc")
-    node_rows = [
-        ("m1", "Mat One", "MATERIAL", None, "mfr1", "Acme", "PENDING", "NONE"),
-        ("c1", "Chem One", "CHEMICAL", "50-00-0", "mfr1", None, "PENDING", "REGEX"),
-    ]
-    acc_schema = (
-        "id string, name string, node_type string, cas_number string, "
-        "manufacturer_id string, manufacturer_name string, "
-        "pfas_status string, pfas_information_source string"
-    )
-    from entity_extractor_spark.streaming.ingest import compact_nodes
+
+    def write(df, b, table):
+        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(batch_dir(out_dir, b), table))
 
     for b in range(50):
+        write(spark.createDataFrame(
+            [("m1", "Mat One", "MATERIAL", None, "mfr1", "PENDING", "NONE", "Acme")],
+            "id string, name string, node_type string, cas_number string, "
+            "manufacturer_id string, pfas_status string, pfas_information_source string, "
+            "manufacturer_name string",
+        ), b, "materials")
         # chemical state upgrades to YES in the final batch: last write wins
-        rows = [
-            node_rows[0],
-            node_rows[1] if b < 49 else ("c1", "Chem One", "CHEMICAL", "50-00-0", "mfr1", None, "YES", "CAS"),
-        ]
-        spark.createDataFrame(rows, acc_schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(acc, f"batch_{b:06d}"))
+        status, source = ("PENDING", "REGEX") if b < 49 else ("YES", "CAS")
+        write(spark.createDataFrame(
+            [("c1", "Chem One", "50-00-0", "mfr1", status, source, "k1")],
+            "chem_id string, name string, cas_number string, manufacturer_id string, "
+            "pfas_status string, pfas_information_source string, cluster string",
+        ), b, "chem_nodes")
         # hasChemical weight re-upserted each batch (J8): weight == batch id
-        spark.createDataFrame(
+        write(spark.createDataFrame(
             [("Mat One", "hasChemical", "Chem One", "m1", "c1", str(b), f"doc-{b}")],
             "subj string, pred string, obj string, subj_id string, obj_id string, "
             "weight_percent string, doc_id string",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_{b:06d}", "triples")
-        )
-        if b == 29:
-            # mid-stream compaction: last-wins must keep preferring the LIVE
-            # tail (batches 30-49) over the compacted head's rows
-            compact_nodes(spark, out_dir)
+        ), b, "triples")
 
-    assert os.path.isdir(os.path.join(acc, "compact_000029"))
     tables = consolidated(spark, out_dir)
     plan = tables["triples"]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1, plan
     trip = tables["triples"].collect()
     assert len(trip) == 1 and trip[0]["weight_percent"] == "49"  # last batch wins
-    nodes = {r["id"]: r for r in tables["nodes"].collect()}
+    rows = tables["nodes"].collect()
+    assert sorted(r["id"] for r in rows) == ["c1", "m1"]
+    nodes = {r["id"]: r for r in rows}
     assert nodes["c1"]["pfas_status"] == "YES"
     assert nodes["m1"]["pfas_status"] == "YES"  # re-folded from final chem state
-    # the state the next MERGE reads holds exactly the newest row per id
-    c1 = read_accumulated_nodes(spark, out_dir).where("id = 'c1'").collect()
-    assert [r["pfas_status"] for r in c1] == ["YES"]
+    assert nodes["m1"]["manufacturer_name"] == "Acme"
+    # the state the next MERGE reads holds exactly the newest row per id,
+    # fenced to the batches before the one being processed
+    state = read_accumulated_nodes(spark, out_dir)
+    assert [r["pfas_status"] for r in state.where("id = 'c1'").collect()] == ["YES"]
+    fenced = read_accumulated_nodes(spark, out_dir, before_batch=49).where("id = 'c1'")
+    assert [r["pfas_status"] for r in fenced.collect()] == ["PENDING"]
+    # node_type is a literal on both sides: a node_type filter scans one table
+    chem = state.where("node_type = 'CHEMICAL'")._jdf.queryExecution().executedPlan().toString()
+    assert chem.count("Scan parquet") == 1, chem
